@@ -37,16 +37,10 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
  *                                 (partitioned sort-merge as-of — the
  *                                 100 TB production shapes),
  *                                 q_stream_asof (streaming twin, O(1) state);
- *                                 SPEC-ONLY (retired from this map r11):
- *                                 the catalyst AsOfJoin node
- *                                 (plans/AsOfJoinOp, exercised+parity-
- *                                 gated in AsofNativeSpec against the
- *                                 oracled q_join_asof) — Catalyst's own
- *                                 RewriteAsOfJoin lowering nested-loops the
- *                                 distinct left as-of keys against the whole
- *                                 right side, so no production entry may
- *                                 carry that plan; the API-completeness
- *                                 record lives in the spec tier
+ *                                 Catalyst's native AsOfJoin node is not
+ *                                 used: its RewriteAsOfJoin lowering
+ *                                 nested-loops the distinct left as-of keys
+ *                                 against the whole right side
   *   B9  hash aggregation ........ q_groupby_agg, q_distinct, q_pivot,
  *                                 q_stats_moments (exact-sum variance), q_percentile,
  *                                 q_corr (exact-sum correlation/covariance),

@@ -14,8 +14,8 @@ import graft.io.Tables
   * is sort(L) + sort(R) + one scan — each side stays its own narrow
   * width (no null-padded union row), and no candidate pair is ever
   * materialized (vs the native AsOfJoin lowering's nested loop over
-  * distinct timestamps, audited in [[graft.plans.AsOfJoinOp]], and the
-  * range-join+row_number form's candidate blowup).
+  * distinct timestamps, and the range-join+row_number form's candidate
+  * blowup).
   *
   * Implementation is the typed Dataset API:
   * `groupByKey(user).cogroupSorted(other)(sort…)(sort…)(merge)` plans as
@@ -29,7 +29,7 @@ import graft.io.Tables
   * form's 0.49 s at sf0.1).
   *
   * Measured honestly (tools.AsofBench, sf0.1, warm best-of-2):
-  * window form 0.22 s · native AsOfJoin 0.19 s · this merge 0.49 s.
+  * window form 0.22 s · this merge 0.49 s.
   * The gap is the CoGroup object boundary (rows cross into case classes
   * for the merge lambda); the union+last window form stays fully in
   * whole-stage codegen and remains the production DEFAULT for this

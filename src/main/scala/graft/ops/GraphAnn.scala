@@ -197,17 +197,25 @@ object GraphAnn {
     * soon as their successor materializes (Ckpt's release discipline),
     * so a build leaves exactly one checkpointed table behind — the
     * returned final graph — however many rounds ran. */
-  private def knnEdgesCkpt(spark: SparkSession, sfDir: String): Ckpt = {
-    val pairs = graphCandidates(spark, sfDir)
-    val both = pairs.select(col("va").as("src"), col("vb").as("nbr"),
+  private def knnEdgesCkpt(spark: SparkSession, sfDir: String): Ckpt =
+    descendCkpt(spark, firstCut(graphCandidates(spark, sfDir)),
+      nodesOf(spark, sfDir))
+
+  /** Per-src top-[[Degree]] rows of an edge table (src, nbr, cos_sim),
+    * ties broken by nbr. */
+  private def topM(edges: DataFrame): DataFrame = {
+    val w = Window.partitionBy("src").orderBy(col("cos_sim").desc, col("nbr"))
+    edges.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= Degree).drop("rank")
+  }
+
+  /** The first-cut graph over scored candidate pairs (va < vb): both
+    * orientations of every pair compete for each endpoint's M slots. */
+  private def firstCut(pairs: DataFrame): DataFrame =
+    topM(pairs.select(col("va").as("src"), col("vb").as("nbr"),
         col("cos_sim"))
       .union(pairs.select(col("vb").as("src"), col("va").as("nbr"),
-        col("cos_sim")))
-    val w = Window.partitionBy("src").orderBy(col("cos_sim").desc, col("nbr"))
-    val edges0 = both.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= Degree).drop("rank")
-    descendCkpt(spark, edges0, nodesOf(spark, sfDir))
-  }
+        col("cos_sim"))))
 
   /** From-scratch refined graph over an ARBITRARY vector frame, banded
     * at the frame's own occupancy bits — the retraction spec's
@@ -219,14 +227,7 @@ object GraphAnn {
     graft.expressions.FloatVectorDot.register(spark)
     val pairs =
       LlmOps.candidateScoresOf(graphBandKeys(corpus, bitsFor(corpus.count())))
-    val both = pairs.select(col("va").as("src"), col("vb").as("nbr"),
-        col("cos_sim"))
-      .union(pairs.select(col("vb").as("src"), col("va").as("nbr"),
-        col("cos_sim")))
-    val w = Window.partitionBy("src").orderBy(col("cos_sim").desc, col("nbr"))
-    val edges0 = both.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= Degree).drop("rank")
-    descendCkpt(spark, edges0, nodesFrom(corpus)).df
+    descendCkpt(spark, firstCut(pairs), nodesFrom(corpus)).df
   }
 
   /** [[DescentRounds]] chained [[refineBody]] passes, each round's
@@ -327,20 +328,11 @@ object GraphAnn {
     graft.expressions.FloatVectorDot.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     val bits = bitsFor(e.count()) // the band scheme is CORPUS-GLOBAL
-    val w = Window.partitionBy("src").orderBy(col("cos_sim").desc, col("nbr"))
-    def topM(df: DataFrame): DataFrame =
-      df.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= Degree).drop("rank")
     val bandC = (0 until Shards).map { s =>
       Ckpt(graphBandKeys(
         e.filter(pmod(col("vec_id"), lit(Shards)) === s), bits))
     }
-    val perShard = bandC.map { kc =>
-      val p = LlmOps.candidateScoresOf(kc.df)
-      topM(p.select(col("va").as("src"), col("vb").as("nbr"), col("cos_sim"))
-        .union(p.select(col("vb").as("src"), col("va").as("nbr"),
-          col("cos_sim"))))
-    }
+    val perShard = bandC.map(kc => firstCut(LlmOps.candidateScoresOf(kc.df)))
     val cross = for {
       i <- 0 until Shards
       j <- i + 1 until Shards

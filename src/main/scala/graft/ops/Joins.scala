@@ -152,61 +152,6 @@ object Joins {
       .orderBy("event_id").limit(100000)
   }
 
-  /** B8 as-of through Catalyst's NATIVE `AsOfJoin` logical node
-    * ([[graft.plans.AsOfJoinOp]]) — the whole-operator tier of the
-    * SURVEY §4.2 ladder. Same relation as [[qJoinAsof]] (AsofNativeSpec
-    * proves row-for-row agreement; same oracle SQL), lowered by Spark's
-    * own `RewriteAsOfJoin` into join + min-struct aggregate.
-    *
-    * Measured (tools.AsofBench, sf0.1 warm best-of-2): native 0.25 s vs
-    * window-form 0.42 s — BUT the lowered plan's first stage is a
-    * nested-loop join of the DISTINCT purchase timestamps against every
-    * error (the by-key is only applied in the final outer join; see the
-    * plans.AsOfJoinOp scale note), so the local win does not survive
-    * scale-up on raw event-time data. The union+last window form stays
-    * the production default; this is the API-completeness path —
-    * SPEC-ONLY since round 11 (not a `queries` entry): the production
-    * map carries no nested-loop-over-full-side plan, and AsofNativeSpec
-    * keeps the row-for-row parity assertion against the oracled
-    * q_join_asof alive. */
-  def qJoinAsofNative(spark: SparkSession, sfDir: String): DataFrame = {
-    val (purchases, errors) = asofSides(spark, sfDir)
-    graft.plans.AsOfJoinOp.asofBackward(purchases, errors,
-        purchases("ts"), errors("err_ts"),
-        purchases("user_id"), errors("err_user"))
-      .select("event_id", "user_id", "ts", "err_event_id", "err_ts")
-      .orderBy("event_id").limit(100000)
-  }
-
-  /** B8 native as-of with tolerance: Catalyst folds the 10-minute bound
-    * into the as-of condition itself, so "latest error within tolerance"
-    * and "latest error, then nulled if out of tolerance" coincide
-    * (backward direction is monotone — any older match is further out).
-    * Same oracle as [[qJoinAsofTol]]. */
-  def qJoinAsofNativeTol(spark: SparkSession, sfDir: String): DataFrame = {
-    val (purchases, errors) = asofSides(spark, sfDir)
-    graft.plans.AsOfJoinOp.asofBackward(purchases, errors,
-        purchases("ts"), errors("err_ts"),
-        purchases("user_id"), errors("err_user"),
-        tolerance = Some(java.time.Duration.ofMinutes(10)))
-      .select("event_id", "user_id", "ts", "err_event_id", "err_ts")
-      .orderBy("event_id").limit(100000)
-  }
-
-  /** The two as-of input streams. The error side is fully re-aliased:
-    * fresh attribute ids keep the self-derived plans duplicate-free
-    * (AsOfJoin requires disjoint child outputs), and distinct names keep
-    * the joined output unambiguous. */
-  private def asofSides(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
-    val ev = Tables.events(spark, sfDir)
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val errors = ev.filter(col("event_type") === "error")
-      .select(col("event_id").as("err_event_id"),
-        col("user_id").as("err_user"), col("ts").as("err_ts"))
-    (purchases, errors)
-  }
-
   /** The as-of match BEFORE the output bound — shared by the plain and
     * tolerance variants. */
   private def qJoinAsofRaw(spark: SparkSession, sfDir: String): DataFrame = {
@@ -247,8 +192,6 @@ object Joins {
     base ++ Map(
       // the partitioned sort-merge form (ops.AsofMerge) computes the
       // SAME relation — one oracle for all the as-of physical shapes
-      // (the native-AsOfJoin variants, demoted to spec-only execution,
-      // assert equality against q_join_asof in AsofNativeSpec)
       "q_join_asof_merge" -> base("q_join_asof"),
       "q_join_asof_merge_tol" -> base("q_join_asof_tol"),
       // the partitioned range join computes the SAME relation as the

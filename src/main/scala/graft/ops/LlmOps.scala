@@ -675,16 +675,19 @@ object LlmOps {
     val base = Ckpt(pairs.select(col("da"), col("db")))
     // release the base in ALL paths: if either derivation's checkpoint
     // job throws (e.g. OOM mid-materialization), the base blocks must
-    // not stay pinned until the next Ckpt.releaseAll (advice r20)
+    // not stay pinned until the next Ckpt.releaseAll (advice r20) — nor
+    // the verts, when it is the edges checkpoint that throws
     val (verts, edges0) =
       try {
         val v = Ckpt(base.df.select(col("da").as("v"))
           .unionByName(base.df.select(col("db").as("v")))
           .distinct())
-        val e = Ckpt(base.df
-          .select(col("da").as("u"), col("db").as("w"))
-          .filter(col("u") =!= col("w"))
-          .distinct())
+        val e =
+          try Ckpt(base.df
+            .select(col("da").as("u"), col("db").as("w"))
+            .filter(col("u") =!= col("w"))
+            .distinct())
+          catch { case t: Throwable => v.release(); throw t }
         (v, e)
       } finally base.release() // verts + edges were its only consumers
     var edges = edges0
@@ -984,7 +987,7 @@ object LlmOps {
     * not stored, so occupancy-bounded banding ([[graft.ops.GraphAnn]])
     * can size `tables × bits` to the corpus (bits ≈ log₂(n/occupancy))
     * without a fixed-pool ceiling. */
-  private[graft] def lshPlanesExt(count: Int): Seq[Seq[Float]] = {
+  private[ops] def lshPlanesExt(count: Int): Seq[Seq[Float]] = {
     val rnd = new scala.util.Random(42)
     Seq.fill(count)(Seq.fill(64)(if (rnd.nextBoolean()) 1.0f else -1.0f))
   }

@@ -599,7 +599,7 @@ object Pipeline {
     * (`element_at(t, i+2)`), and a lambda body re-evaluates its
     * subtrees per ELEMENT — the split ran once per token per row,
     * O(doc_tokens²) character work on the hot per-step pass (guide
-    * §1.2 "per-task work"; measured in BpeProbe). CollapseProject
+    * §1.2 "per-task work"; measured r20). CollapseProject
     * keeps the projections separate (split is non-cheap and
     * multiply-referenced), so codegen evaluates it once per row. */
   private def bpePairCounts(state: DataFrame): DataFrame = {

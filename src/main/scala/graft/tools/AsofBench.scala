@@ -1,39 +1,18 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measures the as-of join formulations (SURVEY §2 B8) head-to-head:
-  * the union+last single-shuffle window form (q_join_asof), the native
-  * catalyst AsOfJoin node lowered by RewriteAsOfJoin to join+aggregate
-  * (q_join_asof_native), and the partitioned sort-merge form
-  * (q_join_asof_merge). Warm best-of-2 each, same session. */
+  * the union+last single-shuffle window form (q_join_asof), the
+  * partitioned sort-merge form (q_join_asof_merge) and the streaming
+  * twin (q_stream_asof). Warm best-of-2 each, same session. */
 object AsofBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // the native variants are spec-only (demoted from SparkEntry.queries
-    // round 11) but stay measurable here — this bench is exactly the
-    // instrument that documents WHY they are not production entries
-    val picks: Seq[(String, (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame)] = Seq(
-      "q_join_asof" -> graft.SparkEntry.queries("q_join_asof"),
-      "q_join_asof_native" -> (graft.ops.Joins.qJoinAsofNative _),
-      "q_join_asof_merge" -> graft.SparkEntry.queries("q_join_asof_merge"),
-      "q_join_asof_tol" -> graft.SparkEntry.queries("q_join_asof_tol"),
-      "q_join_asof_native_tol" -> (graft.ops.Joins.qJoinAsofNativeTol _),
-      "q_join_asof_merge_tol" -> graft.SparkEntry.queries("q_join_asof_merge_tol"),
-      "q_stream_asof" -> graft.SparkEntry.queries("q_stream_asof"))
-    val qs = picks
+    val qs = Seq("q_join_asof", "q_join_asof_merge", "q_join_asof_tol",
+      "q_join_asof_merge_tol", "q_stream_asof")
+      .map(n => n -> graft.SparkEntry.queries(n))
     qs.foreach { case (_, fn) =>
       try fn(spark, sfDir).count() catch { case scala.util.control.NonFatal(_) => () }
     }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.dsl.{Alias, Df, Funcs, UserFuncs}
 import graft.compile.Compiler
 
@@ -11,12 +9,7 @@ import graft.compile.Compiler
 object DslDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val c = Compiler(spark, sfDir)
 

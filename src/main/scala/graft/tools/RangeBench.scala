@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** GraftRangeJoin (broadcast + binary search) and
@@ -12,14 +11,8 @@ import org.apache.spark.sql.functions._
 object RangeBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // small build side (supplier, M≈1.5k at sf0.1): probe cost is noise
     def qSupp() = spark.read.parquet(s"$sfDir/customer.parquet")

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Second-JVM tx writer for the TWO-PROCESS commit-contention spec
@@ -19,10 +18,7 @@ import org.apache.spark.sql.functions._
 object TxContender {
   def main(args: Array[String]): Unit = {
     val Array(root, appId, keyBase, nBatches, rowsPerBatch) = args.take(5)
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Sessions.builder(2)
       .appName(s"tx-contender-$appId").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.write(Paths.get(root, "_child_ready"), Array.emptyByteArray)

@@ -7,6 +7,9 @@ import org.apache.spark.sql.functions._
 object VecDotBench {
   def main(args: Array[String]): Unit = {
     val sf = "/root/testdata/sf0.1"
+    // A bare session on purpose, not graft.Sessions: GraftExtensions'
+    // VecDotRewrite would turn the HOF arm into vec_dot, and the
+    // comparison this bench exists to measure would disappear.
     val spark = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false").getOrCreate()

@@ -1,7 +1,7 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.classic.{DataFrame, Dataset, ExpressionUtils, SparkSession}
+import org.apache.spark.sql.classic.{DataFrame, Dataset, SparkSession}
 
 /** The ONE deliberate use of Spark's package-private surface in this
   * codebase: Scala has no public "logical plan → DataFrame" constructor
@@ -17,9 +17,4 @@ import org.apache.spark.sql.classic.{DataFrame, Dataset, ExpressionUtils, SparkS
 object PlanBridge {
   def ofRows(spark: org.apache.spark.sql.SparkSession, plan: LogicalPlan): DataFrame =
     Dataset.ofRows(spark.asInstanceOf[SparkSession], plan)
-
-  /** Column → Catalyst Expression (Spark 4 moved `Column.expr` behind the
-    * classic converter; same auditability argument as `ofRows`). */
-  def expr(c: org.apache.spark.sql.Column): org.apache.spark.sql.catalyst.expressions.Expression =
-    ExpressionUtils.expression(c)
 }

@@ -57,6 +57,44 @@ class ConnectedComponentsSpec extends AnyFunSuite with Matchers {
     acc.value shouldBe 40L
   }
 
+  test("ccLargeSmallStar leaks no checkpoint when the edges checkpoint fails") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.functions.col
+    // ccLargeSmallStar checkpoints base, then verts, then edges, each as
+    // its own SQL execution. The listener cancels every job of the third
+    // execution — the edges checkpoint, after verts has materialized —
+    // starting with its shuffle-map job, so the edges checkpoint RDD is
+    // never created. The input is large enough that the map job outlives
+    // the listener's delivery, and its keys are not provably distinct
+    // (a plain range id would let the optimizer drop the shuffle).
+    val group = "cc-leak-spec"
+    val execs = scala.collection.mutable.LinkedHashSet[String]()
+    val sc = spark.sparkContext
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val p = js.properties
+        if (p != null && p.getProperty("spark.jobGroup.id") == group)
+          execs.synchronized {
+            execs += p.getProperty("spark.sql.execution.id")
+            if (execs.size == 3 &&
+                execs.last == p.getProperty("spark.sql.execution.id"))
+              sc.cancelJob(js.jobId)
+          }
+      }
+    }
+    val pairs = spark.range(500000).select((col("id") % 400000).as("da"),
+      ((col("id") + 1) % 400000).as("db"))
+    graft.ops.Ckpt.releaseAll(spark)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "cancel the edges checkpoint")
+    val ex =
+      try intercept[Exception](LlmOps.ccLargeSmallStar(pairs, maxRounds = 1))
+      finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString(" ") should include("cancel")
+    sc.getPersistentRDDs shouldBe empty
+  }
+
   test("multiple components + skewed hub: labels are component minima") {
     import spark.implicits._
     val edges =

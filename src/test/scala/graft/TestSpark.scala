@@ -2,24 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local SparkSession for the whole ScalaTest run (JVM-forked).
-  * Mirrors Verify/Bench session config, incl. the nanos-ts read conf
-  * (SURVEY §7.6) so `events` is readable without call-site conf mutation. */
+/** One shared local SparkSession for the whole ScalaTest run (JVM-forked),
+  * built by the production factory [[Sessions]] so the suite runs on the
+  * configuration Verify and Bench use. */
 object TestSpark {
   val sf: String = "/root/testdata/sf0.001"
 
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new graft.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-test")
-      .getOrCreate()
+    val s = Sessions.builder(4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
