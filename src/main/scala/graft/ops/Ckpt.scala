@@ -39,12 +39,25 @@ private[graft] final class Ckpt(val df: DataFrame, rdds: Seq[RDD[_]]) {
 }
 
 private[graft] object Ckpt {
-  /** Eagerly localCheckpoint `df` and capture the backing persisted RDD
-    * via the resulting LogicalRDD leaf (the plan a checkpointed Dataset
-    * wraps), so it can be unpersisted later. */
+  /** Materialize `df` as a local checkpoint and capture the backing
+    * persisted RDD via the resulting LogicalRDD leaf (the plan a
+    * checkpointed Dataset wraps), so it can be unpersisted later.
+    *
+    * The checkpoint is taken lazily and then materialized by one job
+    * over the captured handle. `localCheckpoint` registers the RDD as
+    * persistent before any of its blocks exist, so with the eager form
+    * a failed materialization left a half-written RDD pinned with no
+    * handle to release it; here the failure path unpersists it. The
+    * job count is the eager form's: the lazy call still runs the
+    * plan's shuffle stages (AQE plans them before handing back the
+    * final RDD), and the count is the final stage. Metrics observed on
+    * `df` (`Dataset.observe`) are complete in
+    * `df.queryExecution.observedMetrics` once this returns. */
   def apply(df: DataFrame): Ckpt = {
-    val cp = df.localCheckpoint(true)
+    val cp = df.localCheckpoint(false)
     val handles = cp.queryExecution.logical.collect { case lr: LogicalRDD => lr.rdd }
+    try handles.foreach(_.count())
+    catch { case t: Throwable => handles.foreach(_.unpersist(blocking = false)); throw t }
     new Ckpt(cp, handles)
   }
 

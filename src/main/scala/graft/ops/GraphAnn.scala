@@ -131,16 +131,19 @@ object GraphAnn {
     b
   }
 
-  /** Per-sfDir memo of [[coarseStride]] over the fixture corpus: the
-    * parquet fixture dirs are immutable, so the count — and therefore
-    * the stride — is a constant per sfDir; without the memo every walk
-    * invocation (qAnnGraph, recall gates, incr reads) paid a full
-    * embeddings-scan count() job just to size the entry layer (r14
-    * advice). ConcurrentHashMap: the count job runs at most once per
-    * key per JVM (computeIfAbsent holds only that bin — a duplicate
-    * count under contention would be harmless anyway). */
-  private val strideMemo = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-  private def memoStride(e: DataFrame, sfDir: String): Long = {
+  /** Per-sfDir memo of the fixture corpus's vector count: the parquet
+    * fixture dirs are immutable, so the count — and therefore the
+    * entry-layer stride ([[coarseStride]]) and the build's band bits
+    * ([[bitsFor]]) — is a constant per sfDir; without the memo every
+    * walk invocation (qAnnGraph, recall gates, incr reads) and every
+    * graph build paid a full embeddings-scan count() (two jobs) just to
+    * size itself (r14 advice). ConcurrentHashMap: the count job runs at
+    * most once per key per JVM (computeIfAbsent holds only that bin — a
+    * duplicate count under contention would be harmless anyway). */
+  private val countMemo = new java.util.concurrent.ConcurrentHashMap[String, Long]()
+  private def memoStride(e: DataFrame, sfDir: String): Long =
+    coarseStride(memoCount(e, sfDir))
+  private def memoCount(e: DataFrame, sfDir: String): Long = {
     // key carries the shared recursive content stamp (not the dir's own
     // mtime/length, which is not content-derived for a Spark-written
     // parquet directory) so a regenerated fixture at the same path
@@ -149,9 +152,9 @@ object GraphAnn {
     // the same sfDir are evicted so a corpus-cycling JVM doesn't leak
     val key =
       s"$sfDir:${Housekeeping.contentStamp(s"$sfDir/embeddings.parquet")}"
-    if (!strideMemo.containsKey(key)) // racy pre-clean: duplicates harmless
-      strideMemo.keySet().removeIf((k: String) => k.startsWith(s"$sfDir:"))
-    strideMemo.computeIfAbsent(key, _ => coarseStride(e.count()))
+    if (!countMemo.containsKey(key)) // racy pre-clean: duplicates harmless
+      countMemo.keySet().removeIf((k: String) => k.startsWith(s"$sfDir:"))
+    countMemo.computeIfAbsent(key, _ => e.count())
   }
 
   private def planePool = LlmOps.lshPlanesExt(NTables * MaxBits)
@@ -160,21 +163,21 @@ object GraphAnn {
   private def graphBandKeys(e: DataFrame, bits: Int): DataFrame =
     LlmOps.bandedKeysStrided(e, NTables, bits, MaxBits, planePool)
 
-  /** The build's scored candidate pairs (va < vb): banded self-join at
-    * bits derived from the corpus count — O(tables·n·occ) volume,
-    * pinned ∝ n across SFs by GraphBandScaleSpec. The count() is one
-    * metadata-cheap action at plan-build time. */
-  private[graft] def graphCandidates(spark: SparkSession, sfDir: String): DataFrame = {
+  /** The build's band rows: the fixture corpus banded at bits derived
+    * from its (memoized) count. Their self-join
+    * ([[LlmOps.bandCollisions]]) has O(tables·n·occ) volume, pinned ∝ n
+    * across SFs by GraphBandScaleSpec. */
+  private[graft] def graphBandRows(spark: SparkSession, sfDir: String): DataFrame = {
     graft.expressions.FloatVectorDot.register(spark)
     val e = Tables.embeddings(spark, sfDir)
-    LlmOps.candidateScoresOf(graphBandKeys(e, bitsFor(e.count())))
+    graphBandKeys(e, bitsFor(memoCount(e, sfDir)))
   }
 
   private def cosTo(qv: Column, qnrm: Column): Column =
     round(dot(col("embedding"), qv) / (col("nrm") * qnrm), 6)
 
   /** The k-NN edge table (src, nbr, cos_sim, rank): per-source top-M
-    * over the occupancy-bounded banded candidates ([[graphCandidates]])
+    * over the occupancy-bounded banded candidates ([[graphBandRows]])
     * with BOTH orientations competing for each endpoint's M slots and
     * NO similarity floor (a navigable graph needs every node's best
     * links, close or not). The 6-table OR buys per-edge recall back
@@ -198,24 +201,32 @@ object GraphAnn {
     * so a build leaves exactly one checkpointed table behind — the
     * returned final graph — however many rounds ran. */
   private def knnEdgesCkpt(spark: SparkSession, sfDir: String): Ckpt =
-    descendCkpt(spark, firstCut(graphCandidates(spark, sfDir)),
+    descendCkpt(spark,
+      firstCut(LlmOps.bandCollisions(graphBandRows(spark, sfDir))),
       nodesOf(spark, sfDir))
 
-  /** Per-src top-[[Degree]] rows of an edge table (src, nbr, cos_sim),
-    * ties broken by nbr. */
+  /** Per-src top-[[Degree]] rows of an edge table (src, nbr, cos_sim)
+    * with their `rank`, ties broken by nbr. */
   private def topM(edges: DataFrame): DataFrame = {
     val w = Window.partitionBy("src").orderBy(col("cos_sim").desc, col("nbr"))
     edges.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= Degree).drop("rank")
+      .filter(col("rank") <= Degree)
   }
 
-  /** The first-cut graph over scored candidate pairs (va < vb): both
-    * orientations of every pair compete for each endpoint's M slots. */
-  private def firstCut(pairs: DataFrame): DataFrame =
-    topM(pairs.select(col("va").as("src"), col("vb").as("nbr"),
-        col("cos_sim"))
-      .union(pairs.select(col("vb").as("src"), col("va").as("nbr"),
-        col("cos_sim"))))
+  /** The first-cut graph (src, nbr, cos_sim, rank) over scored band
+    * collisions (va < vb, one row per table the pair collides in): both
+    * orientations of every pair compete for each endpoint's M slots.
+    * Both orientations are emitted from the one scoring pass, and the
+    * dedupe and the top-M run on ONE src partitioning — no separate
+    * pair-dedupe shuffle. */
+  private def firstCut(collisions: DataFrame): DataFrame = {
+    val both = collisions.select(explode(array(
+        struct(col("va").as("src"), col("vb").as("nbr"), col("cos_sim")),
+        struct(col("vb").as("src"), col("va").as("nbr"), col("cos_sim"))))
+      .as("e")).select("e.*")
+    topM(both.repartition(LlmOps.shuffleWidth(collisions.sparkSession),
+      col("src")).distinct())
+  }
 
   /** From-scratch refined graph over an ARBITRARY vector frame, banded
     * at the frame's own occupancy bits — the retraction spec's
@@ -225,25 +236,28 @@ object GraphAnn {
   private[graft] def knnEdgesFrom(spark: SparkSession,
       corpus: DataFrame): DataFrame = {
     graft.expressions.FloatVectorDot.register(spark)
-    val pairs =
-      LlmOps.candidateScoresOf(graphBandKeys(corpus, bitsFor(corpus.count())))
-    descendCkpt(spark, firstCut(pairs), nodesFrom(corpus)).df
+    val collisions =
+      LlmOps.bandCollisions(graphBandKeys(corpus, bitsFor(corpus.count())))
+    descendCkpt(spark, firstCut(collisions), nodesFrom(corpus)).df
   }
 
   /** [[DescentRounds]] chained [[refineBody]] passes, each round's
     * input checkpointed and RELEASED once its successor is resident;
-    * the final table comes back as the one surviving Ckpt. */
+    * the final table comes back as the one surviving Ckpt. Every round
+    * checkpoints the same (src, nbr, cos_sim, rank) shape — a round
+    * reads only (src, nbr) of its input — so the middle and the final
+    * round run one plan and share its generated code. */
   private def descendCkpt(spark: SparkSession, edges0: DataFrame,
       nodes: DataFrame): Ckpt = {
     var cur = Ckpt(edges0)
-    for (_ <- 1 until DescentRounds) {
-      val next = Ckpt(refineBody(cur.df, nodes).drop("rank"))
+    for (_ <- 1 to DescentRounds) {
+      val next =
+        try Ckpt(refineBody(cur.df, nodes))
+        catch { case t: Throwable => cur.release(); throw t }
       cur.release()
       cur = next
     }
-    val fin = Ckpt(refineBody(cur.df, nodes))
-    cur.release()
-    fin
+    cur
   }
 
   /** (vec_id, embedding, nrm) scoring projection of the corpus;
@@ -265,39 +279,48 @@ object GraphAnn {
     * the banded first-cut graph `edges0`, take the bidirectional
     * adjacency, expand every node's 2-hop candidate set (≤ (2M)² per
     * node — O(n·M²) total, corpus-size-independent per node), score
-    * exactly, and re-rank everything seen into the final top-M. This is
+    * exactly, and re-rank everything seen into the final top-M
+    * (src, nbr, cos_sim, rank). This is
     * what lets the occupancy-bounded band keys stay NARROW at scale:
     * banding only has to land each node in the right NEIGHBORHOOD; the
     * descent round recovers the precise edge set from graph structure
     * instead of from candidate volume. All equi-joins; both engines
     * replay it CTE-for-CTE, and GraphAnnSpec measures the recall it
     * buys (≥ IVF-nprobe2 on shared probes). `edges0` must already be
-    * MATERIALIZED (it feeds four join legs) — [[descendCkpt]] owns the
-    * checkpoint-and-release lifecycle. */
+    * MATERIALIZED (both orientations read it) — [[descendCkpt]] owns the
+    * checkpoint-and-release lifecycle.
+    *
+    * Plan shape: the adjacency is deduplicated once (its exchange is
+    * reused by both 2-hop join legs); the 2-hop join keeps its
+    * planner-chosen exchanges, so AQE can still split a hub's skewed
+    * partition at scale. The candidates (2-hop pairs ∪ adjacency) are
+    * then deduped, scored and cut to top-M on ONE src partitioning at
+    * the session's shuffle width, so the scoring runs on every core.
+    * Every candidate is scored from the embeddings, the adjacency's own
+    * pairs included. The generated oracle keeps the stored cosine of an
+    * adjacency pair and unions the re-scored 2-hop pairs under DISTINCT;
+    * the two agree because a pair re-scores to the identical rounded
+    * cosine (same expression over the same embeddings; the product
+    * commutes). The node projection is broadcast once and read by both
+    * endpoint joins (a ReusedExchange). */
   private def refineBody(edges0: DataFrame, nodes: DataFrame): DataFrame = {
-    val bidir0 = edges0.select(col("src"), col("nbr"), col("cos_sim"))
-      .union(edges0.select(col("nbr").as("src"), col("src").as("nbr"),
-        col("cos_sim")))
+    val adj = edges0.select(col("src"), col("nbr"))
+      .union(edges0.select(col("nbr").as("src"), col("src").as("nbr")))
       .distinct()
-    val adj = bidir0.select(col("src"), col("nbr"))
-    val nn = adj.as("e1").join(adj.as("e2"), col("e1.nbr") === col("e2.src"))
+    val hop2 = adj.as("e1").join(adj.as("e2"), col("e1.nbr") === col("e2.src"))
       .select(col("e1.src").as("src"), col("e2.nbr").as("nbr"))
       .filter(col("src") =!= col("nbr"))
+    val cands = hop2.unionByName(adj)
+      .repartition(LlmOps.shuffleWidth(edges0.sparkSession), col("src"))
       .distinct()
     val nSrc = nodes.select(col("vec_id").as("src"),
       col("embedding").as("s_emb"), col("nrm").as("s_nrm"))
     val nNbr = nodes.select(col("vec_id").as("nbr"),
       col("embedding").as("n_emb"), col("nrm").as("n_nrm"))
-    val scored = nn.join(nSrc, "src").join(nNbr, "nbr")
+    topM(cands.join(nSrc, "src").join(nNbr, "nbr")
       .select(col("src"), col("nbr"),
         round(dot(col("s_emb"), col("n_emb")) /
-          (col("s_nrm") * col("n_nrm")), 6).as("cos_sim"))
-    // a 2-hop pair that was already a banded candidate rescoreds to the
-    // identical rounded cosine, so distinct collapses the union exactly
-    val all = bidir0.unionByName(scored).distinct()
-    val w = Window.partitionBy("src").orderBy(col("cos_sim").desc, col("nbr"))
-    all.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= Degree)
+          (col("s_nrm") * col("n_nrm")), 6).as("cos_sim")))
   }
 
   /** Shard count for the SHARDED build demonstration — at 100 TB this
@@ -327,12 +350,13 @@ object GraphAnn {
   def qKnnGraphSharded(spark: SparkSession, sfDir: String): DataFrame = {
     graft.expressions.FloatVectorDot.register(spark)
     val e = Tables.embeddings(spark, sfDir)
-    val bits = bitsFor(e.count()) // the band scheme is CORPUS-GLOBAL
+    val bits = bitsFor(memoCount(e, sfDir)) // the band scheme is CORPUS-GLOBAL
     val bandC = (0 until Shards).map { s =>
       Ckpt(graphBandKeys(
         e.filter(pmod(col("vec_id"), lit(Shards)) === s), bits))
     }
-    val perShard = bandC.map(kc => firstCut(LlmOps.candidateScoresOf(kc.df)))
+    val perShard = bandC.map(kc => firstCut(LlmOps.bandCollisions(kc.df))
+      .select(col("src"), col("nbr"), col("cos_sim")))
     val cross = for {
       i <- 0 until Shards
       j <- i + 1 until Shards

@@ -380,15 +380,37 @@ object LlmOps {
     * `bandCap` ≤ 0 reads the session default (spark.graft.bandCap, 256);
     * specs pass it explicitly so no shared-session conf is mutated
     * (suite-parallelism-safe — see HotBandSpec). */
-  private[graft] def minhashLshFrom(d: DataFrame, bandCap: Int = -1): DataFrame = {
+  private[graft] def minhashLshFrom(d: DataFrame, bandCap: Int = -1): DataFrame =
+    minhashPairsFrom(d, bandCap).orderBy("da", "db")
+
+  /** The session's shuffle width. An explicit-count `repartition(n, key)`
+    * at this width is never coalesced by AQE, so a CPU-heavy stage placed
+    * behind it runs on every core even when its input is far under AQE's
+    * coalescing target. Placed where the next operator needs that hash
+    * partitioning anyway, it replaces that operator's exchange. */
+  private[ops] def shuffleWidth(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions").toInt
+
+  /** [[minhashLshFrom]] without the final sort: the verified (da, db,
+    * jacc) pairs in no particular order. The internal consumers
+    * (connected components, cluster stats, PageRank) checkpoint this
+    * form — a sort under a checkpoint orders nothing anyone reads, and
+    * costs a range-sample job plus a shuffle. */
+  private[graft] def minhashPairsFrom(d: DataFrame, bandCap: Int = -1): DataFrame = {
     val bands = minhashBands(d)
     // SKEW CAP: a band key shared by B docs emits O(B²) candidate pairs
     // — on a pathological corpus (mass-duplicated boilerplate hashing a
     // band to one key) a single hot bucket can dominate the whole join.
     // Cap bucket membership BEFORE the self-join: the per-key count is a
-    // window over the SAME (band, bkey) hash partitioning the join needs
-    // anyway (no extra exchange — the window's shuffle is reused by both
-    // join sides), and over-cap buckets are dropped entirely. Recall
+    // window over the (band, bkey) hash partitioning the join needs
+    // anyway, and over-cap buckets are dropped entirely. The band rows
+    // are repartitioned once on (band, bkey) at the session's shuffle
+    // width: the window and both sides of the sort-merge self-join read
+    // that one exchange (the second side as a ReusedExchange), and AQE
+    // does not coalesce it, so the candidate join runs on every core.
+    // The join is pinned to sort-merge: it spills at any size, and it
+    // needs no broadcast job, which AQE would otherwise add for a small
+    // band set. Recall
     // note: docs in a capped band lose only that band's candidates;
     // with 4 independent bands a true near-dup pair still surfaces
     // through any uncapped band, and a bucket hot enough to hit the cap
@@ -403,10 +425,11 @@ object LlmOps {
     val cap = if (bandCap > 0) bandCap
       else d.sparkSession.conf.get("spark.graft.bandCap", "256").toInt
     val cold = bands
+      .repartition(shuffleWidth(d.sparkSession), col("band"), col("bkey"))
       .withColumn("bn", count(lit(1)).over(Window.partitionBy("band", "bkey")))
       .filter(col("bn") <= cap)
       .drop("bn")
-    val cand = cold.as("a").join(cold.as("b"),
+    val cand = cold.as("a").join(cold.as("b").hint("merge"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
@@ -425,7 +448,6 @@ object LlmOps {
       .select(col("da"), col("db"),
         round(col("inter") / (col("na") + col("nb") - col("inter")), 6).as("jacc"))
       .filter(col("jacc") >= 0.2)
-      .orderBy("da", "db")
   }
 
   /** B23 estimator calibration: banded candidate pairs with BOTH the
@@ -567,7 +589,7 @@ object LlmOps {
     * so a true pair can be missed — the oracle mirrors the SAME banded
     * chain, keeping the correctness gate exact. */
   private[graft] def dedupCandidatePairs(spark: SparkSession, sfDir: String): DataFrame =
-    qMinhashLsh(spark, sfDir).select(col("da"), col("db"))
+    minhashPairsFrom(docs(spark, sfDir)).select(col("da"), col("db"))
 
   /** Connected components by iterative min-label propagation over a
     * (da, db) edge DataFrame. The fixpoint loop runs on the DRIVER but
@@ -622,103 +644,136 @@ object LlmOps {
     (comp, rounds)
   }
 
-  /** One large-star round: every node attaches its strictly-larger
-    * neighbors to the minimum of its closed neighborhood. Skew-safe by
-    * construction — a hub's huge neighbor list becomes ONE min per
-    * group (partial-aggregating groupBy), never a neighbor×neighbor
-    * product. */
-  private def largeStar(edges: DataFrame): DataFrame = {
-    val bidir = edges
-      .unionByName(edges.select(col("w").as("u"), col("u").as("w")))
-      .distinct()
-    val mins = bidir.groupBy("u").agg(min(col("w")).as("mw"))
-      .select(col("u"), least(col("u"), col("mw")).as("m"))
-    bidir.join(mins, "u")
+  /** One large-star step: every node attaches its strictly-larger
+    * neighbours to the minimum of its closed neighbourhood. The minimum
+    * is a `min` window over the undirected adjacency partitioned by u, so
+    * the step is one shuffle and every row stays one edge: a hub's
+    * neighbour list is sorted and buffered as rows in the window's
+    * spillable buffer, never gathered into one array row. A converged
+    * component's root therefore costs a sort of its star edges per round,
+    * not a component-sized row. The output is oriented high→low
+    * (v > u ≥ m) and may repeat an edge. */
+  private def largeStar(edges: DataFrame): DataFrame =
+    edges.unionByName(edges.select(col("w").as("u"), col("u").as("w")))
+      .withColumn("m",
+        least(col("u"), min(col("w")).over(Window.partitionBy("u"))))
       .filter(col("w") > col("u"))
       .select(col("w").as("u"), col("m").as("w"))
-      .distinct()
-  }
 
-  /** One small-star round: each node (over its smaller-or-equal
-    * neighborhood, edges oriented high→low) points itself and its
-    * non-minimal neighbors at the neighborhood minimum. */
-  private def smallStar(edges: DataFrame): DataFrame = {
-    val dir = edges.filter(col("u") =!= col("w"))
-      .select(greatest(col("u"), col("w")).as("u"),
-        least(col("u"), col("w")).as("w"))
-      .distinct()
-    val mins = dir.groupBy("u").agg(min(col("w")).as("m"))
-    val moved = dir.join(mins, "u")
-      .filter(col("w") =!= col("m"))
-      .select(col("w").as("u"), col("m").as("w"))
-    val self = mins.select(col("u"), col("m").as("w"))
-    moved.unionByName(self).filter(col("u") =!= col("w")).distinct()
+  /** One small-star step, again one `min` window partitioned by u. Its
+    * input is [[largeStar]]'s output, already oriented high→low, so each
+    * node's group is its smaller-neighbour set: the node and its
+    * non-minimal neighbours are pointed at that set's minimum. Repeated
+    * edges are left to the round's `distinct`. */
+  private def smallStar(oriented: DataFrame): DataFrame =
+    oriented.withColumn("m", min(col("w")).over(Window.partitionBy("u")))
+      .select(explode(array(
+          struct(col("w").as("u"), col("m").as("w")),
+          struct(col("u"), col("m").as("w")))).as("e"))
+      .select("e.*")
+      .filter(col("u") =!= col("w"))
+
+  /** (count, XOR of a per-edge hash) over an edge set — the round
+    * fingerprint [[ccLargeSmallStar]] observes inside its checkpoint
+    * job. The XOR of distinct elements' hashes is order-free, so equal
+    * sets always have equal fingerprints. */
+  private def observeFingerprint(df: DataFrame, name: String, u: Column,
+      w: Column, keep: Column, hash: (Column, Column) => Column): DataFrame =
+    df.observe(name, count(when(keep, lit(1))).as("n"),
+      coalesce(bit_xor(when(keep, hash(u, w))), lit(0L)).as("x"))
+
+  private def fingerprintOf(df: DataFrame, name: String): (Long, Long) = {
+    val r = df.queryExecution.observedMetrics(name)
+    (r.getLong(0), r.getLong(1))
   }
 
   /** Connected components by ALTERNATING large-star/small-star rounds
     * (Kiveris et al., "Connected Components in MapReduce and Beyond") —
     * the skew-safe production shape: O(log² n) rounds independent of
     * component diameter (vs propagation's O(diameter)), and a skewed hub
-    * component costs one partial-aggregated min per round instead of
-    * re-shuffling its full edge list to one task. Fixpoint = the edge
-    * set is a union of disjoint min-rooted stars; labels read off the
-    * star edges. Deterministic: labels are component-min ids.
-    * Returns ((v, comp) labels, rounds). */
-  private[graft] def ccLargeSmallStar(pairs: DataFrame, maxRounds: Int = 64): (DataFrame, Int) = {
-    // materialize the INPUT once: verts and edges are two separate
-    // eager checkpoints, and each would otherwise evaluate the lazy
-    // `pairs` plan in its own job — for the production callers that is
-    // the whole MinHash-band + Jaccard-verify chain run TWICE (guide §5
-    // "reused and expensive to recompute"; measured ~1.9 s per extra
-    // evaluation at sf0.1 in q_dedup_keep / q_train_prep). Released as
-    // soon as both derivations have materialized.
-    val base = Ckpt(pairs.select(col("da"), col("db")))
-    // release the base in ALL paths: if either derivation's checkpoint
-    // job throws (e.g. OOM mid-materialization), the base blocks must
-    // not stay pinned until the next Ckpt.releaseAll (advice r20) — nor
-    // the verts, when it is the edges checkpoint that throws
-    val (verts, edges0) =
-      try {
-        val v = Ckpt(base.df.select(col("da").as("v"))
-          .unionByName(base.df.select(col("db").as("v")))
-          .distinct())
-        val e =
-          try Ckpt(base.df
-            .select(col("da").as("u"), col("db").as("w"))
-            .filter(col("u") =!= col("w"))
-            .distinct())
-          catch { case t: Throwable => v.release(); throw t }
-        (v, e)
-      } finally base.release() // verts + edges were its only consumers
-    var edges = edges0
+    * component costs one sorted pass over its edges per star step
+    * instead of a neighbour×neighbour product. Fixpoint = the edge set
+    * is a union of disjoint min-rooted stars; labels read off the star
+    * edges. Deterministic: labels are component-min ids.
+    * Returns ((v, comp) labels, rounds).
+    *
+    * Cost shape: ONE input checkpoint, then one checkpoint per round
+    * (three shuffles: the large-star window, the small-star window and
+    * the distinct).
+    *
+    * Convergence is decided inside each round's checkpoint job. The job
+    * observes the fingerprint (edge count, XOR of `edgeHash(u, w)`) of
+    * the round's distinct edge set E_k, and the loop compares it with
+    * the previous round's:
+    *  - a DIFFERENT fingerprint proves E_k ≠ E_{k−1} (equal sets have
+    *    equal counts and equal XORs), so the loop continues with no
+    *    further job;
+    *  - an EQUAL fingerprint is only evidence, since hashes collide. It
+    *    is confirmed by one exact diff: E_k \ E_{k−1} = ∅. Counts are
+    *    equal and E_k has no duplicates, so E_k ⊆ E_{k−1} gives
+    *    |E_k| = |E_{k−1}| ≥ |set(E_{k−1})| ≥ |E_k|, i.e. E_k = E_{k−1}.
+    *    A non-empty diff means a collision, and the loop goes on.
+    * The loop therefore stops exactly when a round reproduces its input
+    * set — the fixpoint — and never on a hash coincidence. E_0 is the input's non-loop rows,
+    * fingerprinted in the input checkpoint's job; duplicate input rows
+    * can only make its fingerprint differ, which costs one extra round
+    * and never an early stop. `edgeHash` exists so a spec can force
+    * collisions. */
+  private[graft] def ccLargeSmallStar(pairs: DataFrame, maxRounds: Int = 64,
+      edgeHash: (Column, Column) => Column = xxhash64(_, _)): (DataFrame, Int) = {
+    // materialize the INPUT once: the first round, its exact diff and
+    // the final vertex set all read it — for the production callers
+    // `pairs` is the whole MinHash-band + Jaccard-verify chain
+    val base0 = observeFingerprint(pairs.select(col("da"), col("db")),
+      "cc_in", col("da"), col("db"), col("da") =!= col("db"), edgeHash)
+    val base = Ckpt(base0)
+    var fp = fingerprintOf(base0, "cc_in")
+    var prev: DataFrame = base.df
+      .select(col("da").as("u"), col("db").as("w"))
+      .filter(col("u") =!= col("w"))
+    var held = List.empty[Ckpt] // star-round checkpoints still resident
     var rounds = 0
     var converged = false
-    while (!converged && rounds < maxRounds) {
-      // checkpoint each round's edge set BEFORE the convergence check so
-      // the two except() jobs and the next round all read one
-      // materialization, and the iterative lineage stays truncated
-      val next = Ckpt(smallStar(largeStar(edges.df)))
-      converged = next.df.except(edges.df).count() == 0 &&
-        edges.df.except(next.df).count() == 0
-      // the superseded round's blocks have no remaining consumer (both
-      // except() jobs above just ran) — release, keeping O(1) resident
-      edges.release()
-      edges = next
-      rounds += 1
+    // every checkpoint this call made is released on a failure (a
+    // cancelled round, a diff that throws, the round cap)
+    try {
+      while (!converged && rounds < maxRounds) {
+        val step = observeFingerprint(smallStar(largeStar(prev)).distinct(),
+          "cc_round", col("u"), col("w"), lit(true), edgeHash)
+        val next = Ckpt(step)
+        held = next :: held
+        val nextFp = fingerprintOf(step, "cc_round")
+        converged = nextFp == fp &&
+          next.df.join(prev, Seq("u", "w"), "left_anti").isEmpty
+        // the superseded round's blocks have no remaining consumer (the
+        // diff above was the last) — release, keeping O(1) resident
+        held.tail.foreach(_.release())
+        held = List(next)
+        prev = next.df
+        fp = nextFp
+        rounds += 1
+      }
+      if (!converged)
+        throw new IllegalStateException(
+          s"ccLargeSmallStar: star rounds did not reach a fixpoint in " +
+            s"$maxRounds rounds — raise maxRounds")
+    } catch {
+      case t: Throwable => (base :: held).foreach(_.release()); throw t
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"ccLargeSmallStar: star rounds did not reach a fixpoint in " +
-          s"$maxRounds rounds — raise maxRounds")
-    // at the fixpoint each non-root has exactly one outgoing (u, root)
-    // edge; the min-agg is cheap insurance that stays deterministic
-    // even on a non-star edge multiset. The FINAL edge set and the vertex
-    // set stay resident — the returned (lazy) label plan reads them when
-    // the caller materializes; sessions clear them between ops
-    // (Ckpt.releaseAll).
-    val roots = edges.df.groupBy(col("u").as("v")).agg(min(col("w")).as("c"))
-    val comp = verts.df.join(roots, Seq("v"), "left")
-      .select(col("v"), coalesce(col("c"), col("v")).as("comp"))
+    // Labels in ONE aggregate: each vertex's label is the min over its
+    // own id (every input endpoint) and its star edges' targets. Star
+    // edges point high→low, so a vertex with an edge gets the least
+    // target and one without keeps its id — the old vertex-set ⋈
+    // per-u-min join, without the separate vertex-set shuffle. At the
+    // fixpoint each non-root has exactly one (u, root) edge; the min
+    // stays deterministic even on a non-star edge multiset. The FINAL
+    // edge set and the input stay resident — the returned (lazy) label
+    // plan reads them when the caller materializes; sessions clear them
+    // between ops (Ckpt.releaseAll).
+    val comp = prev.select(col("u").as("v"), col("w").as("c"))
+      .unionByName(base.df.select(col("da").as("v"), col("da").as("c")))
+      .unionByName(base.df.select(col("db").as("v"), col("db").as("c")))
+      .groupBy("v").agg(min(col("c")).as("comp"))
     (comp, rounds)
   }
 
@@ -769,7 +824,7 @@ object LlmOps {
     // cannot be released here (the returned lazy plan reads it when the
     // caller materializes); long-lived sessions reclaim it between ops
     // via Ckpt.releaseAll.
-    val edges = Ckpt(qMinhashLsh(spark, sfDir)).df
+    val edges = Ckpt(minhashPairsFrom(docs(spark, sfDir))).df
     val clusters = {
       val (comp, _) = ccLargeSmallStar(edges.select(col("da"), col("db")))
       comp.select(col("v").as("doc_id"), col("comp").as("cluster_id"))
@@ -850,7 +905,7 @@ object LlmOps {
     * needed. */
   def qPagerank(spark: SparkSession, sfDir: String): DataFrame =
     pagerankOf(Ckpt(
-      qMinhashLsh(spark, sfDir).select(col("da"), col("db"))).df)
+      minhashPairsFrom(docs(spark, sfDir)).select(col("da"), col("db"))).df)
 
   /** Iteration core of [[qPagerank]], parameterized by any undirected
     * (da, db) edge DataFrame (each pair listed once) so specs can feed
@@ -2485,13 +2540,26 @@ object LlmOps {
     * the shared tail of [[bandedCandidateScores]] and the
     * occupancy-bounded [[graft.ops.GraphAnn]] build. */
   private[graft] def candidateScoresOf(vecs: DataFrame): DataFrame =
-    vecs.as("a").join(vecs.as("b"),
+    bandCollisions(vecs).distinct() // a pair may collide in several tables
+
+  /** The scored band self-join of [[candidateScoresOf]] before its
+    * cross-table dedup: one (va < vb, cos_sim) row per table a pair
+    * collides in. The band rows (24 plane dots per vector) are computed
+    * ONCE, into one `bkey` repartition at the session's shuffle width
+    * that both sides of a sort-merge join read (a broadcast join would
+    * compute them a second time for the build side, and AQE's runtime
+    * switch to one costs a broadcast job). The sort-merge join spills at
+    * any size and keeps that uncoalesced partitioning, so the pair
+    * scoring runs on every core. */
+  private[graft] def bandCollisions(vecs: DataFrame): DataFrame = {
+    val v = vecs.repartition(shuffleWidth(vecs.sparkSession), col("bkey"))
+    v.as("a").join(v.as("b").hint("merge"),
         col("a.bkey") === col("b.bkey") &&
           col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"),
         round(dot(col("a.embedding"), col("b.embedding")) /
           (col("a.nrm") * col("b.nrm")), 6).as("cos_sim"))
-      .distinct() // a pair may collide in several tables
+  }
 
   /** Per-(vector, table) band rows (vec_id, embedding, nrm, bkey) for
     * the banded-candidate joins. `bkey = band · 2^bits + key` — an

@@ -36,12 +36,13 @@ class ConnectedComponentsSpec extends AnyFunSuite with Matchers {
   test("ccLargeSmallStar evaluates its input plan exactly once") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, udf}
-    // the verts and edges checkpoints are separate eager jobs — without
-    // the shared base materialization each would re-run the full input
-    // plan (for production callers: the whole MinHash+verify candidate
-    // chain). Count evaluations with an accumulator behind a
-    // nondeterministic udf (nondeterminism stops the optimizer from
-    // collapsing or duplicating the call): one evaluation per input row.
+    // the first round, its convergence diff and the final vertex set all
+    // read the input — without the shared base materialization each
+    // would re-run the full input plan (for production callers: the
+    // whole MinHash+verify candidate chain). Count evaluations with an
+    // accumulator behind a nondeterministic udf (nondeterminism stops
+    // the optimizer from collapsing or duplicating the call): one
+    // evaluation per input row.
     val acc = spark.sparkContext.longAccumulator("pairsEval")
     val tick = udf { (x: Long) => acc.add(1L); x }.asNondeterministic()
     val pairs = (0L until 40L).map(i => (i, i + 1)).toDF("a", "b")
@@ -58,27 +59,33 @@ class ConnectedComponentsSpec extends AnyFunSuite with Matchers {
   }
 
   test("ccLargeSmallStar leaks no checkpoint when the edges checkpoint fails") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     import org.apache.spark.sql.functions.col
-    // ccLargeSmallStar checkpoints base, then verts, then edges, each as
-    // its own SQL execution. The listener cancels every job of the third
-    // execution — the edges checkpoint, after verts has materialized —
-    // starting with its shuffle-map job, so the edges checkpoint RDD is
-    // never created. The input is large enough that the map job outlives
-    // the listener's delivery, and its keys are not provably distinct
-    // (a plain range id would let the optimizer drop the shuffle).
+    // ccLargeSmallStar checkpoints its input, then each star round's
+    // edge set, each as its own SQL execution. The listener cancels
+    // every job of the second execution — the first star round's
+    // checkpoint, after the input has materialized — starting with its
+    // first shuffle-map job, so the round's checkpoint RDD is never
+    // created and the input checkpoint must be released on the way
+    // out. Executions are numbered in start order, so one that runs no
+    // job of its own (the input here has no shuffle) still counts. The
+    // input is large enough that the map job outlives the listener's
+    // delivery.
     val group = "cc-leak-spec"
-    val execs = scala.collection.mutable.LinkedHashSet[String]()
+    val execs = scala.collection.mutable.ArrayBuffer[Long]()
     val sc = spark.sparkContext
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => execs.synchronized(execs += s.executionId)
+        case _ =>
+      }
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         val p = js.properties
-        if (p != null && p.getProperty("spark.jobGroup.id") == group)
+        val exec = if (p == null) null else p.getProperty("spark.sql.execution.id")
+        if (exec != null && p.getProperty("spark.jobGroup.id") == group)
           execs.synchronized {
-            execs += p.getProperty("spark.sql.execution.id")
-            if (execs.size == 3 &&
-                execs.last == p.getProperty("spark.sql.execution.id"))
-              sc.cancelJob(js.jobId)
+            if (execs.size >= 2 && execs(1) == exec.toLong) sc.cancelJob(js.jobId)
           }
       }
     }
@@ -86,13 +93,32 @@ class ConnectedComponentsSpec extends AnyFunSuite with Matchers {
       ((col("id") + 1) % 400000).as("db"))
     graft.ops.Ckpt.releaseAll(spark)
     sc.addSparkListener(listener)
-    sc.setJobGroup(group, "cancel the edges checkpoint")
+    sc.setJobGroup(group, "cancel the first star-round checkpoint")
     val ex =
-      try intercept[Exception](LlmOps.ccLargeSmallStar(pairs, maxRounds = 1))
+      try intercept[Exception](LlmOps.ccLargeSmallStar(pairs))
       finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
     Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
       .map(t => String.valueOf(t.getMessage)).mkString(" ") should include("cancel")
     sc.getPersistentRDDs shouldBe empty
+  }
+
+  test("equal fingerprints with a non-empty exact diff do not stop the loop") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    // A constant edge hash makes every fingerprint (count, 0), so any two
+    // rounds with the same edge count collide. On the path 0-1-2-3 each
+    // round keeps 3 edges while the set changes twice:
+    //   E0 {(0,1),(1,2),(2,3)} → E1 {(1,0),(2,0),(3,1)} → E2 {(1,0),(2,0),(3,0)}
+    // Stopping on the fingerprint alone would return E1's labels (3 → 1);
+    // the exact diff must reject both collisions and run to E2 = E3.
+    val pairs = Seq((0L, 1L), (1L, 2L), (2L, 3L)).toDF("da", "db")
+    val (hashed, hashedRounds) = LlmOps.ccLargeSmallStar(pairs)
+    val (collided, collidedRounds) =
+      LlmOps.ccLargeSmallStar(pairs, edgeHash = (_, _) => lit(0L))
+    labels(collided) shouldBe Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L)
+    labels(collided) shouldBe labels(hashed)
+    collidedRounds shouldBe hashedRounds
+    collidedRounds shouldBe 3
   }
 
   test("multiple components + skewed hub: labels are component minima") {

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-import graft.ops.GraphAnn
+import graft.ops.{GraphAnn, LlmOps}
 
 /** Pins the graph-ANN build's scale law: the band scheme is
   * OCCUPANCY-BOUNDED (bits = ⌈log₂(n/32)⌉), so the banded self-join's
@@ -32,8 +32,12 @@ class GraphBandScaleSpec extends AnyFunSuite with Matchers {
   test("candidate volume grows ∝ n across SFs, not n²") {
     val small = "/root/testdata/sf0.001" // n = 500  → bits 4
     val large = "/root/testdata/sf0.1" // n = 2000 → bits 6
-    val vSmall = GraphAnn.graphCandidates(spark, small).count().toDouble
-    val vLarge = GraphAnn.graphCandidates(spark, large).count().toDouble
+    // the band self-join the build feeds its first cut: one row per
+    // (pair, table) collision, so it bounds the distinct pair count too
+    def volume(dir: String) =
+      LlmOps.bandCollisions(GraphAnn.graphBandRows(spark, dir)).count().toDouble
+    val vSmall = volume(small)
+    val vLarge = volume(large)
     val nRatio = 2000.0 / 500.0
     withClue(s"volume $vSmall → $vLarge (n ×$nRatio): ") {
       // linear predicts ×4, quadratic-at-fixed-bits predicts ×16;

@@ -49,4 +49,10 @@ class SessionsSpec extends AnyFunSuite with Matchers {
     spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") shouldBe "true"
     spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") shouldBe "false"
   }
+
+  test("the codegen cache is sized for a session's working set of classes") {
+    spark.conf.get("spark.sql.codegen.cache.maxEntries") shouldBe
+      Sessions.CodegenCacheEntries.toString
+    Sessions.CodegenCacheEntries should be >= 1000
+  }
 }
