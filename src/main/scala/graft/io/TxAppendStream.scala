@@ -81,30 +81,20 @@ final class TxAppendSourceProvider extends StreamSourceProvider
         java.nio.file.Paths.get(new java.net.URI(metadataPath).getPath)
       else java.nio.file.Paths.get(metadataPath)
     val metaFile = metaDir.resolve("graft_tx_append_schema.json")
-    val (schCap, physCap, verCap) =
-      if (java.nio.file.Files.exists(metaFile)) {
-        val lines = java.nio.file.Files.readAllLines(metaFile)
-        (org.apache.spark.sql.types.DataType.fromJson(lines.get(0))
-          .asInstanceOf[StructType],
-          org.apache.spark.sql.types.DataType.fromJson(lines.get(1))
-            .asInstanceOf[StructType],
-          lines.get(2).toLong)
-      } else {
-        java.nio.file.Files.createDirectories(metaDir)
-        val tmp = metaDir.resolve(s"_tmp_${java.util.UUID.randomUUID()}")
-        java.nio.file.Files.write(tmp, java.util.Arrays.asList(
-          snap.schema.json, snap.physSchema.json, snap.version.toString))
-        try java.nio.file.Files.createLink(metaFile, tmp)
-        catch { case _: java.nio.file.FileAlreadyExistsException => () }
-        finally java.nio.file.Files.deleteIfExists(tmp)
-        // re-read: a racing first-starter's capture wins atomically
-        val lines = java.nio.file.Files.readAllLines(metaFile)
-        (org.apache.spark.sql.types.DataType.fromJson(lines.get(0))
-          .asInstanceOf[StructType],
-          org.apache.spark.sql.types.DataType.fromJson(lines.get(1))
-            .asInstanceOf[StructType],
-          lines.get(2).toLong)
-      }
+    if (!java.nio.file.Files.exists(metaFile)) {
+      java.nio.file.Files.createDirectories(metaDir)
+      val tmp = metaDir.resolve(s"_tmp_${java.util.UUID.randomUUID()}")
+      java.nio.file.Files.write(tmp, java.util.Arrays.asList(
+        snap.schema.json, snap.physSchema.json, snap.version.toString))
+      try java.nio.file.Files.createLink(metaFile, tmp)
+      catch { case _: java.nio.file.FileAlreadyExistsException => () }
+      finally java.nio.file.Files.deleteIfExists(tmp)
+    }
+    // (re-)read: a racing first-starter's capture wins atomically
+    val lines = java.nio.file.Files.readAllLines(metaFile)
+    def schemaAt(i: Int) = org.apache.spark.sql.types.DataType
+      .fromJson(lines.get(i)).asInstanceOf[StructType]
+    val (schCap, physCap, verCap) = (schemaAt(0), schemaAt(1), lines.get(2).toLong)
     new TxAppendSource(ctx, root, schCap, physCap, verCap,
       parameters.get("startingVersion").map(_.toLong),
       parameters.getOrElse("maxVersionsPerBatch", "10").toInt,
@@ -172,16 +162,19 @@ private[io] final class TxAppendSource(ctx: SQLContext,
           spark.createDataFrame(
             java.util.Collections.emptyList[org.apache.spark.sql.Row](),
             schema)
-        else
+        else {
           // read under the STREAM's captured PHYS schema (what the
           // files store — stable across renames, since phys names are
           // fixed at column birth), projected to the captured logical
           // names; files written after a widening evolution project
           // down to the captured columns
-          spark.read.schema(physSchema)
-            .parquet(adds.map(a => s"$root/${a.path}"): _*)
+          val snap = TxTable.snapshot(root, Some(e))
+          val captured =
+            TxTable.Snapshot(e, physSchema, snap.physOf(snap.key), adds)
+          TxTable.scanFiles(spark, root, captured, adds)
             .select(schema.fieldNames.zip(physSchema.fieldNames).map {
               case (l, p) => col(p).as(l) }.toSeq: _*)
+        }
       }
     val aligned = df.select(schema.fieldNames.map(col).toSeq: _*)
     GraftStreamingShim.streamingDataFrame(

@@ -3,13 +3,15 @@ package graft.io
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo,
   Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan,
   LessThanOrEqual, Literal, Murmur3Hash, Or, Pmod}
 import org.apache.spark.sql.execution.datasources.{FileIndex,
   HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType, TimestampNTZType,
+  TimestampType}
 
 /** Catalyst-integrated read path for [[TxTable]]: the table surfaces as
   * a `HadoopFsRelation` whose `FileIndex` is the manifest, so file
@@ -39,11 +41,8 @@ object TxRelation {
     * key), so merge-on-read tables read correctly here too — filter
     * pushdown still reaches the scan below the join. */
   def read(spark: SparkSession, root: String,
-      version: Option[Long] = None): DataFrame = {
-    val snap = TxTable.snapshot(root, version)
-    val data = readSnapshot(spark, root, snap)
-    TxTable.subtractDvs(spark, root, data, snap.key, snap.dvs)
-  }
+      version: Option[Long] = None): DataFrame =
+    readPinned(spark, root, TxTable.snapshot(root, version))
 
   /** Read a PINNED snapshot (no re-resolution of "latest") — the
     * statement-level isolation path used by the SQL catalog
@@ -80,28 +79,33 @@ object TxRelation {
     val hit = idxCache.get(key)
     if (hit != null) hit
     else {
-      val idx = new TxFileIndex(root, snap)
+      val idx = new TxFileIndex(root, snap, snap.files)
       idxCache.put(key, idx)
       idx
     }
   }
 
   private[io] def readSnapshot(spark: SparkSession, root: String,
-      snap: TxTable.Snapshot): DataFrame = {
-    val index = fileIndexFor(root, snap)
-    // with an active column mapping the scan runs under the PHYSICAL
-    // schema (what the files store) and one projection restores the
-    // logical names — filters pushed through the aliases reach the
-    // FileIndex as phys attributes, which is what its stats speak
+      snap: TxTable.Snapshot): DataFrame =
     // a bucketed table surfaces its layout as a real BucketSpec: the
     // scan's output partitioning becomes HashPartitioning(bucketBy, n)
     // (bucket ids parsed from the `_NNNNN` file-name suffix our writer
     // emits), so equi-joins on the bucket columns read the table side
     // WITHOUT an Exchange — the standing-index contract
-    val bucketSpec =
+    scan(spark, snap, fileIndexFor(root, snap),
       if (snap.bucketBy.isEmpty) None
-      else Some(org.apache.spark.sql.catalyst.catalog.BucketSpec(
-        snap.nBuckets, snap.bucketBy.map(snap.physOf), Nil))
+      else Some(BucketSpec(snap.nBuckets, snap.bucketBy.map(snap.physOf), Nil)))
+
+  /** THE scan constructor of the tx tier: a `HadoopFsRelation` over a
+    * manifest `index`, read under `snap`'s stored schema. The manifest
+    * already names every file and its schema, so nothing is discovered:
+    * no path listing, no schema-inference job, no data-source lookup.
+    * With an active column mapping the scan runs under the PHYSICAL
+    * schema (what the files store) and one projection restores the
+    * logical names — filters pushed through the aliases reach the
+    * FileIndex as phys attributes, which is what its stats speak. */
+  private[io] def scan(spark: SparkSession, snap: TxTable.Snapshot,
+      index: TxFileIndex, bucketSpec: Option[BucketSpec] = None): DataFrame = {
     val relation = HadoopFsRelation(
       location = index,
       partitionSchema = new StructType(),
@@ -117,13 +121,14 @@ object TxRelation {
   }
 }
 
-/** Manifest-backed `FileIndex`: lists the snapshot's live files, pruned
-  * by evaluating pushed data filters against per-file column stats
-  * (cluster key [minK, maxK] plus the meta-declared stats columns).
-  * Driver-side, O(#files); file sizes are stat'ed once at construction
-  * so `sizeInBytes` feeds join-strategy costing honestly. */
-final class TxFileIndex(root: String, snap: TxTable.Snapshot)
-    extends FileIndex {
+/** Manifest-backed `FileIndex`: lists `files` (the snapshot's live
+  * set, or a subset for change-feed sides and copy-on-write hit sets),
+  * pruned by evaluating pushed data filters against per-file
+  * column stats (cluster key [minK, maxK] plus the meta-declared stats
+  * columns). Driver-side, O(#files); file sizes are stat'ed once at
+  * construction so `sizeInBytes` feeds join-strategy costing honestly. */
+final class TxFileIndex(root: String, snap: TxTable.Snapshot,
+    files: Seq[TxTable.AddFile]) extends FileIndex {
 
   /** #files returned by the most recent `listFiles` — lets specs pin
     * that Catalyst-pushed filters actually reached the manifest (the
@@ -131,9 +136,10 @@ final class TxFileIndex(root: String, snap: TxTable.Snapshot)
     * deterministic handle). */
   @volatile var lastListedFiles: Int = -1
 
-  /** Exact live row count from the manifest (Σ add.rows) — consumed by
-    * the TxMetadataCount optimizer rule for metadata-only count(*). */
-  def totalRows: Long = snap.files.map(_.rows).sum
+  /** Exact row count of the listed files from the manifest (Σ add.rows)
+    * — consumed by the TxMetadataCount optimizer rule for metadata-only
+    * count(*). */
+  def totalRows: Long = files.map(_.rows).sum
 
   /** Whether the snapshot carries deletion vectors (then data rows ≠
     * manifest rows until compaction and the count rule must not fire —
@@ -147,11 +153,11 @@ final class TxFileIndex(root: String, snap: TxTable.Snapshot)
   def keyType: org.apache.spark.sql.types.DataType =
     snap.schema(snap.key).dataType
   def minKey: Option[Long] =
-    if (snap.files.isEmpty) None else Some(snap.files.map(_.minK).min)
+    if (files.isEmpty) None else Some(files.map(_.minK).min)
   def maxKey: Option[Long] =
-    if (snap.files.isEmpty) None else Some(snap.files.map(_.maxK).max)
+    if (files.isEmpty) None else Some(files.map(_.maxK).max)
 
-  private val statuses: Seq[(TxTable.AddFile, FileStatus)] = snap.files.map {
+  private val statuses: Seq[(TxTable.AddFile, FileStatus)] = files.map {
     f =>
       val p = new java.io.File(s"$root/${f.path}")
       f -> new FileStatus(p.length(), false, 1, 128L * 1024 * 1024,
@@ -247,9 +253,19 @@ final class TxFileIndex(root: String, snap: TxTable.Snapshot)
     if (name == snap.physOf(snap.key)) Some((f.minK.toDouble, f.maxK.toDouble))
     else f.stats.get(name)
 
-  private def num(l: Literal): Option[Double] = l.value match {
-    case n: java.lang.Number => Some(n.doubleValue)
-    case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
+  /** A pushed literal's value in the unit its column's stats are stored
+    * in ([[TxTable]] `AddFile`): timestamps in seconds (their internal
+    * micros / 1e6, exactly Spark's timestamp-to-double cast, so stats
+    * written by that cast in older manifests compare right too), dates
+    * in days, numbers as themselves. Anything else has no unit and
+    * never prunes. */
+  private def num(l: Literal): Option[Double] = num(l.value, l.dataType)
+
+  private def num(v: Any, t: DataType): Option[Double] = (v, t) match {
+    case (us: java.lang.Long, TimestampType | TimestampNTZType) =>
+      Some(us.doubleValue / 1e6)
+    case (n: java.lang.Number, _) => Some(n.doubleValue)
+    case (d: org.apache.spark.sql.types.Decimal, _) => Some(d.toDouble)
     case _ => None
   }
 
@@ -279,19 +295,18 @@ final class TxFileIndex(root: String, snap: TxTable.Snapshot)
     case LessThanOrEqual(l: Literal, a: Attribute) => cmp(f, a, l)(
       (_, mx, v) => v <= mx)
     case In(a: Attribute, vs) if vs.forall(_.isInstanceOf[Literal]) =>
-      range(f, a.name) match {
-        case Some((mn, mx)) if !mn.isNaN && !mx.isNaN => vs.exists(v =>
-          num(v.asInstanceOf[Literal]).forall(d => d >= mn && d <= mx))
-        case _ => true
-      }
-    case InSet(a: Attribute, vs) => range(f, a.name) match {
-      case Some((mn, mx)) if !mn.isNaN && !mx.isNaN => vs.exists {
-        case n: java.lang.Number => n.doubleValue >= mn && n.doubleValue <= mx
-        case _ => true
-      }
-      case _ => true
-    }
+      anyIn(f, a, vs.map(v => num(v.asInstanceOf[Literal])))
+    case InSet(a: Attribute, vs) => anyIn(f, a, vs.toSeq.map(num(_, a.dataType)))
     case _ => true // unsupported shape: never prune on it
+  }
+
+  /** Whether some value of a list may lie in `a`'s range (a value with
+    * no unit may). */
+  private def anyIn(f: TxTable.AddFile, a: Attribute,
+      vs: Seq[Option[Double]]): Boolean = range(f, a.name) match {
+    case Some((mn, mx)) if !mn.isNaN && !mx.isNaN =>
+      vs.exists(_.forall(d => d >= mn && d <= mx))
+    case _ => true
   }
 
   private def cmp(f: TxTable.AddFile, a: Attribute, l: Literal)(

@@ -8,9 +8,17 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.column.statistics.Statistics
+import org.apache.parquet.conf.PlainParquetConfiguration
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ColumnPath
+import org.apache.parquet.io.LocalInputFile
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, Decimal, StructField, StructType}
 
 /** Minimal transactional table format ("tx table") — the warehouse
   * capability the round-9 verdict listed as the last missing tier:
@@ -30,7 +38,8 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * checkpoint) log files, not O(history)). Every `add` carries row
   * count and min/max of the table's integral cluster key, and writers
   * range-cluster data files on that key (`repartitionByRange` +
-  * `sortWithinPartitions`), so DELETE/MERGE rewrite only files whose
+  * `sortWithinPartitions`; one file needs no exchange, just
+  * `coalesce(1)`), so DELETE/MERGE rewrite only files whose
   * key range can contain affected keys and readers can skip files by
   * predicate — the file-skipping that makes copy-on-write affordable
   * at 100 TB (a point DELETE rewrites one file, not the corpus).
@@ -56,9 +65,12 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * leaves garbage (an unreferenced staging dir), never a torn table.
   *
   * Driver-side work is O(#files) metadata only (the same scan-planning
-  * work any engine's planner does); per-file stats come from ONE
-  * column-pruned Spark scan of just the newly written files' key
-  * column at commit time — never a corpus pass.
+  * work any engine's planner does). The manifest is the only way the
+  * tier finds and describes its files: every read is a
+  * `HadoopFsRelation` over a manifest `FileIndex` ([[TxRelation.scan]]
+  * — no path listing, no schema inference), and per-file stats come
+  * from the Parquet footers the write just produced ([[footerFacts]])
+  * — no Spark job, never a corpus pass.
   */
 object TxTable {
 
@@ -66,7 +78,11 @@ object TxTable {
     * plus optional per-column [min, max] for the table's declared stats
     * columns (doubles — exact for integrals up to 2^53, which covers
     * any realistic surrogate key; the pruning contract is MAY-contain,
-    * so a wider-than-true range is always safe). */
+    * so a wider-than-true range is always safe). Units: numbers as
+    * themselves, dates in days, timestamps in seconds (micros / 1e6);
+    * a column whose footer stats have no such unit (strings, INT96
+    * timestamps) or hold a NaN gets no entry, and a missing entry
+    * never prunes. */
   final case class AddFile(path: String, rows: Long, minK: Long, maxK: Long,
       stats: Map[String, (Double, Double)] = Map.empty)
 
@@ -202,9 +218,12 @@ object TxTable {
     metaLine(s.schema, s.key, s.statsCols, s.cols, s.maxColId, s.retiredPhys,
       s.bucketBy, s.nBuckets)
 
-  private def addLine(a: AddFile): String = {
+  private def addLine(a: AddFile): String = fileLine("add", a)
+  private def addDvLine(a: AddFile): String = fileLine("adddv", a)
+
+  private def fileLine(t: String, a: AddFile): String = {
     val m = new java.util.LinkedHashMap[String, Object]()
-    m.put("t", "add"); m.put("path", a.path)
+    m.put("t", t); m.put("path", a.path)
     m.put("rows", java.lang.Long.valueOf(a.rows))
     m.put("minK", java.lang.Long.valueOf(a.minK))
     m.put("maxK", java.lang.Long.valueOf(a.maxK))
@@ -228,15 +247,6 @@ object TxTable {
     }
     AddFile(n.get("path").asText, n.get("rows").asLong,
       n.get("minK").asLong, n.get("maxK").asLong, stats)
-  }
-
-  private def addDvLine(a: AddFile): String = {
-    val m = new java.util.LinkedHashMap[String, Object]()
-    m.put("t", "adddv"); m.put("path", a.path)
-    m.put("rows", java.lang.Long.valueOf(a.rows))
-    m.put("minK", java.lang.Long.valueOf(a.minK))
-    m.put("maxK", java.lang.Long.valueOf(a.maxK))
-    mapper.writeValueAsString(m)
   }
 
   private def txnLine(app: String, batch: Long): String = {
@@ -352,9 +362,7 @@ object TxTable {
     */
   def commit(root: String, expected: Long, lines: Seq[String],
       removes: Set[String] = Set.empty): Long = {
-    Files.createDirectories(logDir(root))
-    val tmp = logDir(root).resolve(s"_tmp_${UUID.randomUUID()}.json")
-    Files.write(tmp, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    val tmp = writeTmp(root, lines)
     try {
       var v = expected
       while (true) {
@@ -375,6 +383,14 @@ object TxTable {
     } finally Files.deleteIfExists(tmp)
   }
 
+  /** `lines` written to a fresh `_log/_tmp_<uuid>.json` (readers ignore
+    * `_tmp_*`); the commit publishes it by hard link. */
+  private def writeTmp(root: String, lines: Seq[String]): Path = {
+    Files.createDirectories(logDir(root))
+    val tmp = logDir(root).resolve(s"_tmp_${UUID.randomUUID()}.json")
+    Files.write(tmp, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
+  }
+
   /** Re-stamp a just-published commit's mtime to NOW: the hard link
     * shares the tmp file's inode, whose mtime is the tmp WRITE time —
     * under contention a writer can publish long after it wrote. The
@@ -391,6 +407,17 @@ object TxTable {
     * commit-storming and deserves a loud failure, not a livelock. */
   private val MaxCowRetries = 10
 
+  /** The strict-commit loop every snapshot-dependent writer shares: run
+    * `attempt` — which re-reads the snapshot, recomputes, and RETURNS
+    * from the calling writer once its commit lands — at most
+    * [[MaxCowRetries]] times; that many lost races in a row fail loudly
+    * as `what`. */
+  private def retrying(root: String, what: String)(attempt: => Unit): Nothing = {
+    (1 to MaxCowRetries).foreach(_ => attempt)
+    throw new java.util.ConcurrentModificationException(
+      s"$what at $root lost $MaxCowRetries commit races; giving up")
+  }
+
   /** STRICT commit: publish `lines` at exactly `expected`, or return
     * false if that slot is taken. For writers whose validity depends on
     * the snapshot they read (txn watermarks, deletion-vector dead
@@ -398,9 +425,7 @@ object TxTable {
     * retrying — blind rebase (the [[commit]] path) would let a zombie
     * writer land a batch its restarted twin already committed. */
   def commitAt(root: String, expected: Long, lines: Seq[String]): Boolean = {
-    Files.createDirectories(logDir(root))
-    val tmp = logDir(root).resolve(s"_tmp_${UUID.randomUUID()}.json")
-    Files.write(tmp, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    val tmp = writeTmp(root, lines)
     try {
       try {
         Files.createLink(verFile(root, expected), tmp)
@@ -566,9 +591,9 @@ object TxTable {
   def read(spark: SparkSession, root: String, version: Option[Long] = None,
       keyLo: Option[Long] = None, keyHi: Option[Long] = None): DataFrame = {
     val s = snapshot(root, version)
-    val files = s.files
-      .filter(f => keyLo.forall(_ <= f.maxK) && keyHi.forall(_ >= f.minK))
-    readFiles(spark, root, s, files)
+    if (keyLo.isEmpty && keyHi.isEmpty) TxRelation.readPinned(spark, root, s)
+    else readFiles(spark, root, s, s.files
+      .filter(f => keyLo.forall(_ <= f.maxK) && keyHi.forall(_ >= f.minK)))
   }
 
   /** THE merge-on-read subtraction, shared by every DV-aware read path
@@ -581,27 +606,36 @@ object TxTable {
       df: DataFrame, key: String, dvs: Seq[AddFile]): DataFrame =
     if (dvs.isEmpty) df
     else {
-      val dead = spark.read.parquet(dvs.map(d => s"$root/${d.path}"): _*)
+      val dead = dvScan(spark, root, dvs)
       df.join(broadcast(dead), df(key).cast("long") === dead("k"),
         "left_anti")
     }
 
-  /** Raw multi-file scan of `files` under snapshot `s`'s schema. With
-    * an active column mapping, files are read under the PHYSICAL
-    * schema and projected to the logical names — so a renamed column
-    * reads its original stored data, and a dropped-then-re-added name
-    * reads null (fresh phys absent from old files), never stale
+  /** The fixed schema of every deletion-vector file: the tombstoned keys. */
+  private val DvSchema = StructType(Seq(
+    StructField("k", org.apache.spark.sql.types.LongType)))
+
+  /** Scan of deletion-vector files: a manifest index over `dvs` under
+    * [[DvSchema]], keyed on `k` so their [minK, maxK] prune too. */
+  private def dvScan(spark: SparkSession, root: String,
+      dvs: Seq[AddFile]): DataFrame = {
+    val s = Snapshot(0L, DvSchema, "k", dvs)
+    TxRelation.scan(spark, s, new TxFileIndex(root, s, dvs))
+  }
+
+  /** Scan of an ad-hoc file subset (change-feed sides, copy-on-write hit
+    * sets) under snapshot `s`'s schema. The index is built for this read
+    * only, so the (root, Snapshot) memo of full-snapshot reads keeps its
+    * entries. With an active column mapping, files are read under the
+    * PHYSICAL schema and projected to the logical names — so a renamed
+    * column reads its original stored data, and a dropped-then-re-added
+    * name reads null (fresh phys absent from old files), never stale
     * bytes. */
   private[io] def scanFiles(spark: SparkSession, root: String, s: Snapshot,
       files: Seq[AddFile]): DataFrame =
     if (files.isEmpty)
       spark.createDataFrame(java.util.Collections.emptyList[Row](), s.schema)
-    else {
-      val raw = spark.read.schema(s.physSchema)
-        .parquet(files.map(f => s"$root/${f.path}"): _*)
-      if (!s.mappingActive) raw
-      else raw.select(s.colMap.map(c => col(c.phys).as(c.name)): _*)
-    }
+    else TxRelation.scan(spark, s, new TxFileIndex(root, s, files))
 
   /** Scan `files` through snapshot `s`'s merge-on-read lens: data files
     * minus the snapshot's live deletion-vector keys. */
@@ -611,81 +645,144 @@ object TxTable {
 
   // ---- writers ----------------------------------------------------------
 
+  /** Footer facts of one staged parquet file: its row count, the
+    * cluster key's [min, max] and NULL count, and each stats column's
+    * [min, max] in the unit the pruner compares pushed literals in
+    * ([[AddFile]]). Read on the driver from the footer the write just
+    * produced — no Spark job. */
+  private[io] final case class FileFacts(rows: Long, minK: Long, maxK: Long,
+      nullK: Long, stats: Map[String, (Double, Double)])
+
+  /** Footer read options, built once: the no-arg builder re-parses
+    * Hadoop's `core-default.xml` for every file. */
+  private lazy val footerOpts =
+    ParquetReadOptions.builder(new PlainParquetConfiguration()).build()
+
+  private[io] def footerFacts(file: Path, key: String,
+      statsCols: Seq[String]): FileFacts = {
+    val reader = ParquetFileReader.open(new LocalInputFile(file), footerOpts)
+    val groups =
+      try reader.getFooter.getBlocks.asScala.toSeq finally reader.close()
+    // one column's statistics merged over every row group, or None when
+    // some group's min/max does not cover its non-null values: parquet
+    // drops a float/double group's min/max when the group holds a NaN
+    def column(c: String): Option[Statistics[_]] = {
+      val chunks = groups.flatMap(g => g.getColumns.asScala
+        .find(_.getPath == ColumnPath.get(c))
+        .map(m => g.getRowCount -> m.getStatistics))
+      if (chunks.isEmpty || chunks.size < groups.size || chunks.exists {
+          case (n, st) => !st.hasNonNullValue && st.getNumNulls != n }) None
+      else Some(chunks.map(_._2).reduce[Statistics[_]] { (a, b) =>
+        val m = a.copy(); m.mergeStatistics(b); m })
+    }
+    val rows = groups.map(_.getRowCount).sum
+    val k = column(key)
+    val nullK = k.fold(0L)(_.getNumNulls)
+    // the key stays an exact long, never routed through a double
+    val (minK, maxK) = k.filter(_.hasNonNullValue).map(st =>
+      (st.`type`.getLogicalTypeAnnotation, st.genericGetMin, st.genericGetMax)) match {
+      case Some((null | _: LogicalTypeAnnotation.IntLogicalTypeAnnotation,
+          mn: java.lang.Number, mx: java.lang.Number)) =>
+        (mn.longValue, mx.longValue)
+      case _ if rows == 0L || nullK > 0L => (0L, 0L) // no entry, or rejected
+      case _ => throw new IllegalStateException(
+        s"no footer min/max for cluster key '$key' in $file")
+    }
+    FileFacts(rows, minK, maxK, nullK, statsCols.flatMap(c =>
+      column(c).filter(_.hasNonNullValue).flatMap(st =>
+        for (mn <- unitValue(st.`type`, st.genericGetMin);
+             mx <- unitValue(st.`type`, st.genericGetMax)) yield c -> (mn, mx))
+    ).toMap)
+  }
+
+  /** A footer min/max in its column's [[AddFile]] stats unit; None when
+    * the type has none (strings, booleans, INT96 or non-micros
+    * timestamps). */
+  private def unitValue(t: PrimitiveType, v: Any): Option[Double] = {
+    import LogicalTypeAnnotation._
+    (t.getLogicalTypeAnnotation, v) match {
+      case (d: DecimalLogicalTypeAnnotation, n: java.lang.Number) =>
+        Some(Decimal(n.longValue, d.getPrecision, d.getScale).toDouble)
+      case (d: DecimalLogicalTypeAnnotation, b: Binary) =>
+        Some(Decimal(new java.math.BigDecimal(
+          new java.math.BigInteger(b.getBytes), d.getScale)).toDouble)
+      case (ts: TimestampLogicalTypeAnnotation, n: java.lang.Long)
+          if ts.getUnit == TimeUnit.MICROS => Some(n.longValue / 1e6)
+      case (null | _: DateLogicalTypeAnnotation, n: java.lang.Number) =>
+        Some(n.doubleValue)
+      case (i: IntLogicalTypeAnnotation, n: java.lang.Number) if i.isSigned =>
+        Some(n.doubleValue)
+      case _ => None
+    }
+  }
+
+  /** Run `write` into a fresh staging directory under `root`, move the
+    * parquet files it left into `root` as `name(stagedFile)` and return
+    * their manifest entries, with stats from [[footerFacts]] under the
+    * files' PHYSICAL column names (stable across renames — the pruning
+    * lookup translates, TxFileIndex.range). A NULL cluster key rejects
+    * the whole write and publishes nothing; a 0-row file (Spark writes
+    * one for an empty output) yields no entry. Staging is always
+    * deleted, so a crash before commit leaves at most an inert staging
+    * directory. No leading underscore in its name: Spark's writers
+    * treat `_`/`.`-prefixed paths as hidden. */
+  private def publishStaged(root: String, key: String,
+      statsCols: Seq[String], mapping: Seq[TxCol], name: Path => String)(
+      write: String => Unit): Seq[AddFile] = {
+    val staging = Paths.get(root, s"staging-${UUID.randomUUID()}")
+    try {
+      write(staging.toString)
+      def phys(n: String) = mapping.find(_.name == n).fold(n)(_.phys)
+      val walk = Files.walk(staging)
+      val staged = try walk.iterator.asScala.toList
+        .filter(_.getFileName.toString.matches("part-.*\\.parquet"))
+        finally walk.close()
+      val facts =
+        staged.map(p => p -> footerFacts(p, phys(key), statsCols.map(phys)))
+      // loud contract, not silent loss: a NULL cluster key has no range
+      // stats, escapes BETWEEN-based rewrites under three-valued logic,
+      // and can't be tombstoned by key — reject it at the door
+      if (facts.exists(_._2.nullK > 0L))
+        throw new IllegalArgumentException(
+          s"tx table cluster key '$key' must be non-null")
+      facts.collect { case (p, f) if f.rows > 0L =>
+        val n = name(p)
+        Files.move(p, Paths.get(root, n), StandardCopyOption.ATOMIC_MOVE)
+        AddFile(n, f.rows, f.minK, f.maxK, f.stats)
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(staging.toFile)
+  }
+
+  /** `df`'s logical columns under their PHYSICAL names (what the files
+    * store), then `extra`; `df` itself when no name differs. */
+  private def physical(df: DataFrame, mapping: Seq[TxCol],
+      extra: Column*): DataFrame =
+    if (!mapping.exists(c => c.name != c.phys)) df
+    else df.select(mapping.map(c => col(c.name).as(c.phys)) ++ extra: _*)
+
   /** Range-cluster `df` on `key` into ≤ `nFiles` immutable parquet files
-    * under `root`, returning their manifest entries. Stats come from one
-    * column-pruned aggregation over ONLY the staged files (commit-time
-    * cost is O(new data's key column), independent of table size); the
-    * files are then moved from staging into the root under fresh UUID
-    * names, so a crash before commit leaves only an ignorable staging
-    * directory. */
-  private def writeDataFiles(spark: SparkSession, root: String, df0: DataFrame,
+    * under `root`, returning their manifest entries. One file is
+    * `coalesce(1)` + a sort in the write's own task — no exchange, so
+    * the commit is ONE Spark job; more files range-partition (a sample
+    * job and a shuffle). Stats come from the staged files' footers
+    * ([[publishStaged]]); the files are then moved from staging into the
+    * root under fresh UUID names, so a crash before commit leaves only
+    * an ignorable staging directory. */
+  private def writeDataFiles(root: String, df0: DataFrame,
       key: String, nFiles: Int, statsCols0: Seq[String] = Seq.empty,
       clusterBy: Option[org.apache.spark.sql.Column] = None,
       mapping: Seq[TxCol] = Seq.empty): Seq[AddFile] = {
-    // active column mapping: callers hand LOGICAL columns; files store
-    // PHYSICAL names. The cluster expression is computed BEFORE the
-    // rename so z-order/key expressions stay logical; stats names and
-    // AddFile.stats keys go physical (stable across renames — the
-    // pruning lookup translates, TxFileIndex.range)
-    val active = mapping.exists(c => c.name != c.phys)
-    def physOf(n: String) =
-      if (active) mapping.find(_.name == n).map(_.phys).getOrElse(n) else n
+    // callers hand LOGICAL columns; files store PHYSICAL names. The
     // cluster expression defaults to the range key; a caller may supply
     // any expression over df's columns (e.g. an interleaved z-value) —
-    // it is computed on the fly for layout only, never stored
+    // it is computed BEFORE the rename, for layout only, never stored
     val cl = clusterBy.getOrElse(col(key))
-    val clustered0 = df0.repartitionByRange(nFiles, cl).sortWithinPartitions(cl)
     val clustered =
-      if (!active) clustered0
-      else clustered0.select(mapping.map(c => col(c.name).as(c.phys)): _*)
-    val (keyP, statsCols) = (physOf(key), statsCols0.map(physOf))
-    // no leading underscore: Spark's file index treats `_`/`.`-prefixed
-    // paths as hidden, and the stats scan reads this directory directly.
-    // Readers never glob the table root (they read explicit manifest
-    // paths), so a crash-leftover staging dir is inert either way.
-    val staging = Paths.get(root, s"staging-${UUID.randomUUID()}")
-    clustered.write.parquet(staging.toString)
-    val extraAggs = statsCols.flatMap(c => Seq(
-      min(col(c).cast("double")).as(s"__mn_$c"),
-      max(col(c).cast("double")).as(s"__mx_$c")))
-    val aggs = Seq(count(lit(1)).as("rows"),
-      min(col(keyP).cast("long")).as("mn"),
-      max(col(keyP).cast("long")).as("mx"),
-      sum(when(col(keyP).isNull, 1L).otherwise(0L)).as("nullk")) ++ extraAggs
-    val stats = spark.read.parquet(staging.toString)
-      .groupBy(input_file_name().as("f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect() // O(#new files), never row data
-    // loud contract, not silent loss: a NULL cluster key has no range
-    // stats, escapes BETWEEN-based rewrites under three-valued logic,
-    // and can't be tombstoned by key — reject it at the door
-    if (stats.exists(_.getAs[Long]("nullk") > 0L)) {
-      org.apache.commons.io.FileUtils.deleteDirectory(staging.toFile)
-      throw new IllegalArgumentException(
-        s"tx table cluster key '$key' must be non-null")
-    }
-    val adds = stats.toSeq.map { r =>
-      val staged = Paths.get(new java.net.URI(r.getString(0)).getPath)
-      val name = s"part-${UUID.randomUUID()}.parquet"
-      Files.move(staged, Paths.get(root, name), StandardCopyOption.ATOMIC_MOVE)
-      // an all-null column in a file has no min/max — omit the entry
-      // (readers treat a missing stat as "may contain anything")
-      val st = statsCols.flatMap { c =>
-        (Option(r.getAs[java.lang.Double](s"__mn_$c")),
-          Option(r.getAs[java.lang.Double](s"__mx_$c"))) match {
-          // NaN min/max (a NaN value in the file poisons max()) would
-          // make every comparison false and wrongly prune the file —
-          // treat as "no stat", the parquet row-group convention
-          case (Some(mn), Some(mx))
-            if !mn.doubleValue.isNaN && !mx.doubleValue.isNaN =>
-            Some(c -> (mn.doubleValue, mx.doubleValue))
-          case _ => None
-        }
-      }.toMap
-      AddFile(name, r.getLong(1), r.getLong(2), r.getLong(3), st)
-    }
-    org.apache.commons.io.FileUtils.deleteDirectory(staging.toFile)
-    adds
+      (if (nFiles == 1) df0.coalesce(1) else df0.repartitionByRange(nFiles, cl))
+        .sortWithinPartitions(cl)
+    publishStaged(root, key, statsCols0, mapping,
+      _ => s"part-${UUID.randomUUID()}.parquet")(
+      physical(clustered, mapping).write.parquet)
   }
 
   /** HASH-BUCKETED writer — the layout standing INDEX tables use so
@@ -701,74 +798,24 @@ object TxTable {
     * the range writer's (key min/max per file — wide for a hashed
     * layout, which is fine: bucket tables prune by bucket, not by
     * range). */
-  private def writeBucketedFiles(spark: SparkSession, root: String,
+  private def writeBucketedFiles(root: String,
       df0: DataFrame, key: String, bucketBy: Seq[String], nBuckets: Int,
       statsCols0: Seq[String], mapping: Seq[TxCol]): Seq[AddFile] = {
-    val active = mapping.exists(c => c.name != c.phys)
-    def physOf(n: String) =
-      if (active) mapping.find(_.name == n).map(_.phys).getOrElse(n) else n
-    val bId = pmod(hash(bucketBy.map(col): _*), lit(nBuckets))
-    val dfB0 = df0.withColumn("__bucket", bId)
+    val dfB = df0.withColumn("__bucket",
+      pmod(hash(bucketBy.map(col): _*), lit(nBuckets)))
       .repartition(nBuckets, col("__bucket"))
-    val dfB =
-      if (!active) dfB0
-      else dfB0.select(mapping.map(c => col(c.name).as(c.phys)) :+
-        col("__bucket"): _*)
-    val (keyP, statsCols) = (physOf(key), statsCols0.map(physOf))
-    val staging = Paths.get(root, s"staging-${UUID.randomUUID()}")
     // partitionBy splits each task's rows into one file per bucket
     // value; with the bucket repartition above, a bucket lives wholly
-    // in one task → exactly one file per non-empty bucket
-    dfB.write.partitionBy("__bucket").parquet(staging.toString)
-    // an EMPTY frame (a bucket compaction after every row was
-    // MOR-deleted, or an owner prune that drops everything) stages only
-    // _SUCCESS — reading that back would die on schema inference; the
-    // correct add-set is simply empty, and the caller's commit becomes
-    // pure file removal
-    val walk = Files.walk(staging)
-    val anyPart =
-      try walk.anyMatch(p => p.getFileName.toString.endsWith(".parquet"))
-      finally walk.close()
-    if (!anyPart) {
-      org.apache.commons.io.FileUtils.deleteDirectory(staging.toFile)
-      return Seq.empty
-    }
-    val extraAggs = statsCols.flatMap(c => Seq(
-      min(col(c).cast("double")).as(s"__mn_$c"),
-      max(col(c).cast("double")).as(s"__mx_$c")))
-    val aggs = Seq(count(lit(1)).as("rows"),
-      min(col(keyP).cast("long")).as("mn"),
-      max(col(keyP).cast("long")).as("mx"),
-      sum(when(col(keyP).isNull, 1L).otherwise(0L)).as("nullk"),
-      first(col("__bucket")).as("bucket")) ++ extraAggs
-    val stats = spark.read.parquet(staging.toString)
-      .groupBy(input_file_name().as("f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    if (stats.exists(_.getAs[Long]("nullk") > 0L)) {
-      org.apache.commons.io.FileUtils.deleteDirectory(staging.toFile)
-      throw new IllegalArgumentException(
-        s"tx table cluster key '$key' must be non-null")
-    }
-    val adds = stats.toSeq.map { r =>
-      val staged = Paths.get(new java.net.URI(r.getString(0)).getPath)
-      val b = r.getAs[Number]("bucket").intValue
-      val name = f"part-${UUID.randomUUID()}_$b%05d.parquet"
-      Files.move(staged, Paths.get(root, name), StandardCopyOption.ATOMIC_MOVE)
-      val st = statsCols.flatMap { c =>
-        (Option(r.getAs[java.lang.Double](s"__mn_$c")),
-          Option(r.getAs[java.lang.Double](s"__mx_$c"))) match {
-          case (Some(mn), Some(mx))
-            if !mn.doubleValue.isNaN && !mx.doubleValue.isNaN =>
-            Some(c -> (mn.doubleValue, mx.doubleValue))
-          case _ => None
-        }
-      }.toMap
-      AddFile(name, r.getAs[Long]("rows"), r.getAs[Long]("mn"),
-        r.getAs[Long]("mx"), st)
-    }
-    org.apache.commons.io.FileUtils.deleteDirectory(staging.toFile)
-    adds
+    // in one task → exactly one file per non-empty bucket, staged under
+    // `__bucket=<b>/`. An EMPTY frame (a bucket compaction after every
+    // row was MOR-deleted, or an owner prune that drops everything)
+    // stages no file: the add-set is empty and the caller's commit
+    // becomes pure file removal
+    publishStaged(root, key, statsCols0, mapping, { p =>
+      val b = p.getParent.getFileName.toString.stripPrefix("__bucket=").toInt
+      f"part-${UUID.randomUUID()}_$b%05d.parquet"
+    })(physical(dfB, mapping, col("__bucket"))
+      .write.partitionBy("__bucket").parquet)
   }
 
   /** Create a HASH-BUCKETED table at v0: the ACID/time-travel/
@@ -793,7 +840,7 @@ object TxTable {
     bucketBy.foreach(c => require(df.schema.fieldNames.contains(c),
       s"bucket column '$c' is not a column of the schema"))
     Files.createDirectories(Paths.get(root))
-    val adds = writeBucketedFiles(spark, root, df, key, bucketBy, nBuckets,
+    val adds = writeBucketedFiles(root, df, key, bucketBy, nBuckets,
       statsCols, Seq.empty)
     if (!commitAt(root, 0L, metaLine(df.schema, key, statsCols,
         bucketBy = bucketBy, nBuckets = nBuckets) +: adds.map(addLine)))
@@ -814,7 +861,7 @@ object TxTable {
       clusterBy: Option[org.apache.spark.sql.Column] = None): Long = {
     require(versions(root).isEmpty, s"table already exists at $root")
     Files.createDirectories(Paths.get(root))
-    val adds = writeDataFiles(spark, root, df, key, nFiles, statsCols, clusterBy)
+    val adds = writeDataFiles(root, df, key, nFiles, statsCols, clusterBy)
     // STRICT commit at v0: a racing create must fail loudly — the
     // rebase path would silently union two seeds into one table
     if (!commitAt(root, 0L, metaLine(df.schema, key, statsCols) +:
@@ -904,32 +951,23 @@ object TxTable {
   private def dvRewriteActions(spark: SparkSession, root: String,
       s: Snapshot, hit: Seq[AddFile]): Seq[String] = {
     if (s.dvs.isEmpty || hit.isEmpty) return Seq.empty
-    val dv = spark.read.parquet(s.dvs.map(d => s"$root/${d.path}"): _*)
+    val dv = dvScan(spark, root, s.dvs)
     val rawKeys = scanFiles(spark, root, s, hit)
       .select(col(s.key).cast("long").as("hk"))
     val dropKeys = rawKeys
       .join(broadcast(dv), col("hk") === dv("k"), "left_semi")
     val keep = dv.join(broadcast(dropKeys), dv("k") === col("hk"),
       "left_anti")
-    val staging = Paths.get(root, s"staging-${UUID.randomUUID()}")
-    keep.coalesce(1).write.parquet(staging.toString)
-    val st = spark.read.parquet(staging.toString)
-      .agg(count(lit(1)), min(col("k")), max(col("k"))).head
-    val removes = s.dvs.map(f => removeLine(f.path))
-    val adds =
-      if (st.getLong(0) == 0L) Seq.empty
-      else {
-        val name = s"dv-${UUID.randomUUID()}.parquet"
-        val staged = staging.toFile.listFiles()
-          .filter(f => f.getName.endsWith(".parquet")).head
-        Files.move(staged.toPath, Paths.get(root, name),
-          StandardCopyOption.ATOMIC_MOVE)
-        Seq(addDvLine(AddFile(name, st.getLong(0), st.getLong(1),
-          st.getLong(2))))
-      }
-    org.apache.commons.io.FileUtils.deleteDirectory(staging.toFile)
-    removes ++ adds
+    s.dvs.map(f => removeLine(f.path)) ++
+      writeDv(root, keep).map(addDvLine)
   }
+
+  /** Stage `dead` (one long column `k`) as one dv parquet and publish it
+    * into `root`; None when it holds no row. */
+  private def writeDv(root: String, dead: DataFrame): Option[AddFile] =
+    publishStaged(root, "k", Seq.empty, Seq.empty,
+      _ => s"dv-${UUID.randomUUID()}.parquet")(
+      dead.coalesce(1).write.parquet).headOption
 
   /** `df` projected to `schema`'s column order, null-filling columns
     * `df` lacks — the writer-side alignment every append path shares. */
@@ -942,6 +980,14 @@ object TxTable {
       if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }: _*)
+
+  /** The files of an append to `s`'s table, in its layout. */
+  private def writeAppended(root: String, s: Snapshot,
+      df: DataFrame, nFiles: Int, mapping: Seq[TxCol]): Seq[AddFile] =
+    if (s.bucketBy.nonEmpty) writeBucketedFiles(root, df, s.key,
+      s.bucketBy, s.nBuckets, s.statsCols, mapping)
+    else writeDataFiles(root, df, s.key, nFiles, s.statsCols,
+      mapping = mapping)
 
   /** Blind append — never conflicts; rebases past concurrent commits.
     * With `mergeSchema`, columns in `df` beyond the table schema WIDEN
@@ -967,12 +1013,7 @@ object TxTable {
       if (newCols.isEmpty) s.schema else StructType(s.schema.fields ++ newCols)
     val aligned = alignTo(df, schema2)
     val (mCols, mMax) = extendedCols(s, newCols)
-    val adds =
-      if (s.bucketBy.nonEmpty)
-        writeBucketedFiles(spark, root, aligned, s.key, s.bucketBy,
-          s.nBuckets, s.statsCols, mCols)
-      else writeDataFiles(spark, root, aligned, s.key, nFiles,
-        s.statsCols, mapping = mCols)
+    val adds = writeAppended(root, s, aligned, nFiles, mCols)
     if (newCols.isEmpty)
       return commit(root, s.version + 1, adds.map(addLine))
     var cur = s
@@ -1012,8 +1053,7 @@ object TxTable {
     * would clobber a racing evolution's columns. */
   def evolveSchema(root: String, newFields: Seq[StructField]): Long = {
     require(newFields.nonEmpty, "ALTER ADD COLUMNS: no columns given")
-    var attempts = 0
-    while (attempts < MaxCowRetries) {
+    retrying(root, "schema evolution") {
       val s = snapshot(root)
       newFields.foreach(f => require(!s.schema.fieldNames.contains(f.name),
         s"column '${f.name}' already exists in ${s.schema.fieldNames.mkString(",")}"))
@@ -1023,10 +1063,7 @@ object TxTable {
           Seq(metaLine(widened, s.key, s.statsCols, eCols, eMax,
             s.retiredPhys, s.bucketBy, s.nBuckets))))
         return s.version + 1
-      attempts += 1 // racing winner may have evolved too: re-validate
     }
-    throw new java.util.ConcurrentModificationException(
-      s"schema evolution at $root lost $MaxCowRetries commit races")
   }
 
   /** Extend a snapshot's column mapping with fresh fields. On an
@@ -1061,8 +1098,7 @@ object TxTable {
     * the old meta and sees the old name. STRICT commit in the usual
     * re-validate loop. */
   def renameColumn(root: String, from: String, to: String): Long = {
-    var attempts = 0
-    while (attempts < MaxCowRetries) {
+    retrying(root, "rename") {
       val s = snapshot(root)
       require(s.schema.fieldNames.contains(from),
         s"RENAME COLUMN: no column '$from' in ${s.schema.fieldNames.mkString(",")}")
@@ -1083,10 +1119,7 @@ object TxTable {
           Seq(metaLine(schema2, key2, stats2, cols2, maxId2, s.retiredPhys,
             bucket2, s.nBuckets))))
         return s.version + 1
-      attempts += 1
     }
-    throw new java.util.ConcurrentModificationException(
-      s"rename at $root lost $MaxCowRetries commit races")
   }
 
   /** Metadata-only column DROP (`ALTER TABLE … DROP COLUMN`): one meta
@@ -1097,8 +1130,7 @@ object TxTable {
     * instead of resurrecting the retired column. The cluster key
     * cannot be dropped. */
   def dropColumn(root: String, name: String): Long = {
-    var attempts = 0
-    while (attempts < MaxCowRetries) {
+    retrying(root, "drop column") {
       val s = snapshot(root)
       require(s.schema.fieldNames.contains(name),
         s"DROP COLUMN: no column '$name' in ${s.schema.fieldNames.mkString(",")}")
@@ -1116,10 +1148,7 @@ object TxTable {
           Seq(metaLine(schema2, s.key, stats2, cols2, maxId2,
             s.retiredPhys :+ gone.phys, s.bucketBy, s.nBuckets))))
         return s.version + 1
-      attempts += 1
     }
-    throw new java.util.ConcurrentModificationException(
-      s"drop column at $root lost $MaxCowRetries commit races")
   }
 
   /** Atomic full overwrite — the `INSERT OVERWRITE` commit: ONE commit
@@ -1134,19 +1163,15 @@ object TxTable {
   def overwrite(spark: SparkSession, root: String, df: DataFrame,
       nFiles: Int = 8): Long = {
     val s0 = snapshot(root)
-    require(s0.bucketBy.isEmpty,
-      s"$root is a BUCKETED table - copy-on-write rewrites would break " +
-        "bucket placement; index maintenance is append + MOR delete + " +
-        "per-bucket compaction (compactBuckets) + periodic rebuild")
+    requireRangeLayout(root, s0)
     val newCols = df.schema.fields
       .filterNot(f => s0.schema.fieldNames.contains(f.name))
     require(newCols.isEmpty,
       s"INSERT OVERWRITE carries new columns ${newCols.map(_.name).mkString(",")}; " +
         "evolve the schema first")
-    val adds = writeDataFiles(spark, root, alignTo(df, s0.schema), s0.key,
+    val adds = writeDataFiles(root, alignTo(df, s0.schema), s0.key,
       nFiles, s0.statsCols, mapping = s0.cols)
-    var attempts = 0
-    while (attempts < MaxCowRetries) {
+    retrying(root, "overwrite") {
       val s = snapshot(root)
       // re-validated against the commit-attempt snapshot like every
       // other COW path: a racing createBucketed/evolution must not
@@ -1157,10 +1182,7 @@ object TxTable {
       if (commitAt(root, s.version + 1,
           gone.map(removeLine) ++ adds.map(addLine)))
         return s.version + 1
-      attempts += 1 // racing commit changed the live set: re-remove it
     }
-    throw new java.util.ConcurrentModificationException(
-      s"overwrite at $root lost $MaxCowRetries commit races")
   }
 
   /** Idempotent APPEND for streaming ingest — the exactly-once
@@ -1197,12 +1219,8 @@ object TxTable {
     require(newCols.isEmpty,
       s"streaming batch carries new columns ${newCols.map(_.name).mkString(",")}; " +
         "evolve the schema with append(mergeSchema = true) first")
-    val adds =
-      if (s0.bucketBy.nonEmpty)
-        writeBucketedFiles(spark, root, alignTo(df, s0.schema), s0.key,
-          s0.bucketBy, s0.nBuckets, s0.statsCols, s0.cols)
-      else writeDataFiles(spark, root, alignTo(df, s0.schema), s0.key,
-        nFiles, s0.statsCols, mapping = s0.cols)
+    val adds = writeAppended(root, s0, alignTo(df, s0.schema), nFiles,
+      s0.cols)
     val lines = txnLine(appId, batchId) +: adds.map(addLine)
     var s = s0
     var attempts = 0
@@ -1261,12 +1279,11 @@ object TxTable {
     // already-dead keys as fresh deletes. Newly-dead = keys dead at toV
     // minus keys dead at fromV (two broadcasts of the small dv sets).
     val dvPre = if (st.dvs.isEmpty) rd(Seq.empty) else {
-      val deadTo = spark.read.parquet(st.dvs.map(d => s"$root/${d.path}"): _*)
+      val deadTo = dvScan(spark, root, st.dvs)
       val deadNew =
         if (sf.dvs.isEmpty) deadTo
         else {
-          val deadFrom =
-            spark.read.parquet(sf.dvs.map(d => s"$root/${d.path}"): _*)
+          val deadFrom = dvScan(spark, root, sf.dvs)
           deadTo.join(broadcast(deadFrom), deadTo("k") === deadFrom("k"),
             "left_anti")
         }
@@ -1305,23 +1322,28 @@ object TxTable {
       .select(col("__c.*"))
   }
 
+  /** Range-layout rewrites (delete/update/merge/optimize/compact/
+    * overwrite) refuse a bucketed table: a range re-cluster would break
+    * bucket placement. */
+  private def requireRangeLayout(root: String, s: Snapshot): Unit =
+    require(s.bucketBy.isEmpty,
+      s"$root is a BUCKETED table - copy-on-write rewrites would break " +
+        "bucket placement; index maintenance is append + MOR delete + " +
+        "per-bucket compaction (compactBuckets) + periodic rebuild")
+
   /** Copy-on-write DELETE of rows with key in [lo, hi]: files whose
     * range misses the bound are untouched (stats pruning on the WRITE
     * side); hit files are read back, filtered, and rewritten. */
   def delete(spark: SparkSession, root: String, lo: Long, hi: Long,
       nFiles: Int = 4): Long = {
-    var attempts = 0
-    while (attempts < MaxCowRetries) {
+    retrying(root, "delete") {
       val s = snapshot(root)
-      require(s.bucketBy.isEmpty,
-        s"$root is a BUCKETED table - copy-on-write rewrites would break " +
-          "bucket placement; index maintenance is append + MOR delete + " +
-          "per-bucket compaction (compactBuckets) + periodic rebuild")
+      requireRangeLayout(root, s)
       val hit = s.files.filter(f => f.maxK >= lo && f.minK <= hi)
       if (hit.isEmpty) return s.version
       val keep = readFiles(spark, root, s, hit)
         .filter(!(col(s.key).cast("long").between(lo, hi)))
-      val adds = writeDataFiles(spark, root, keep, s.key, nFiles,
+      val adds = writeDataFiles(root, keep, s.key, nFiles,
         s.statsCols, mapping = s.cols)
       // the rewrite physically drops tombstoned rows of the hit files —
       // shrink the dv set in the SAME commit so countRows stays exact
@@ -1334,10 +1356,7 @@ object TxTable {
       if (commitAt(root, s.version + 1,
           hit.map(f => removeLine(f.path)) ++ adds.map(addLine) ++ dvLines))
         return s.version + 1
-      attempts += 1
     }
-    throw new java.util.ConcurrentModificationException(
-      s"delete at $root lost $MaxCowRetries commit races; giving up")
   }
 
   /** Merge-on-read DELETE of rows with key in [lo, hi]: instead of
@@ -1407,7 +1426,7 @@ object TxTable {
     * UPDATE contract), and only files that may hold an affected key
     * are rewritten — affected keys come from a stats-pruned read
     * through the Catalyst relation, candidacy from the O(#files)
-    * manifest range join ([[merge]]'s device). The cluster key itself
+    * manifest range join ([[filesHolding]]). The cluster key itself
     * is not assignable (it is the row's identity — changing it is a
     * delete + insert, which MERGE expresses). Strict commit,
     * recompute-on-retry, dv invariant maintained. */
@@ -1415,13 +1434,9 @@ object TxTable {
       cond: org.apache.spark.sql.Column,
       sets: Seq[(String, org.apache.spark.sql.Column)],
       nFiles: Int = 4): Long = {
-    var attempts = 0
-    while (attempts < MaxCowRetries) {
+    retrying(root, "update") {
       val s = snapshot(root)
-      require(s.bucketBy.isEmpty,
-        s"$root is a BUCKETED table - copy-on-write rewrites would break " +
-          "bucket placement; index maintenance is append + MOR delete + " +
-          "per-bucket compaction (compactBuckets) + periodic rebuild")
+      requireRangeLayout(root, s)
       sets.foreach { case (c, _) =>
         require(s.schema.fieldNames.contains(c), s"unknown column '$c'")
         require(c != s.key,
@@ -1430,14 +1445,8 @@ object TxTable {
       }
       val live = subtractDvs(spark, root,
         TxRelation.readSnapshot(spark, root, s), s.key, s.dvs)
-      val affected = live.filter(cond)
-        .select(col(s.key).cast("long").as("k")).distinct()
-      val ranges = spark.createDataFrame(
-        s.files.map(f => (f.path, f.minK, f.maxK))).toDF("path", "mn", "mx")
-      val hitPaths = affected
-        .join(broadcast(ranges), col("k").between(col("mn"), col("mx")))
-        .select("path").distinct()
-        .collect().map(_.getString(0)).toSet // O(#files)
+      val hitPaths = filesHolding(spark, s,
+        live.filter(cond).select(col(s.key).cast("long").as("k")))
       if (hitPaths.isEmpty) return s.version // no row matched: no-op
       val hit = s.files.filter(f => hitPaths(f.path))
       val updated = readFiles(spark, root, s, hit)
@@ -1449,16 +1458,27 @@ object TxTable {
             case None => col(c)
           }
         }: _*)
-      val adds = writeDataFiles(spark, root, updated, s.key, nFiles,
+      val adds = writeDataFiles(root, updated, s.key, nFiles,
         s.statsCols, mapping = s.cols)
       val dvLines = dvRewriteActions(spark, root, s, hit)
       if (commitAt(root, s.version + 1,
           hit.map(f => removeLine(f.path)) ++ adds.map(addLine) ++ dvLines))
         return s.version + 1
-      attempts += 1
     }
-    throw new java.util.ConcurrentModificationException(
-      s"update at $root lost $MaxCowRetries commit races; giving up")
+  }
+
+  /** Paths of `s`'s files whose key range holds a `k` of `keys`: a
+    * broadcast range join over the O(#files) manifest (a file holding a
+    * key has it inside its [minK, maxK], so no false negatives). Each
+    * task dedupes its own matches, so the lookup is ONE job with no
+    * shuffle, and at most #tasks × #files paths reach the driver. */
+  private def filesHolding(spark: SparkSession, s: Snapshot,
+      keys: DataFrame): Set[String] = {
+    val ranges = spark.createDataFrame(
+      s.files.map(f => (f.path, f.minK, f.maxK))).toDF("path", "mn", "mx")
+    keys.join(broadcast(ranges), col("k").between(col("mn"), col("mx")))
+      .select("path").as(Encoders.STRING)
+      .mapPartitions(_.toSet.iterator)(Encoders.STRING).collect().toSet
   }
 
   /** Shared MOR-delete machinery: stage `deadFor(snapshot)` as one dv
@@ -1468,35 +1488,17 @@ object TxTable {
     * set, is a version-preserving no-op. */
   private def morDeleteLoop(spark: SparkSession, root: String)(
       deadFor: Snapshot => Option[DataFrame]): Long = {
-    var attempts = 0
-    while (attempts < MaxCowRetries) {
+    retrying(root, "MOR delete") {
       val s = snapshot(root)
       val dead = deadFor(s) match {
         case None => return s.version
         case Some(d) => d
       }
-      val staging = Paths.get(root, s"staging-${UUID.randomUUID()}")
-      dead.coalesce(1).write.parquet(staging.toString)
-      val st = spark.read.parquet(staging.toString)
-        .agg(count(lit(1)), min(col("k")), max(col("k"))).head
-      if (st.getLong(0) == 0L) {
-        org.apache.commons.io.FileUtils.deleteDirectory(staging.toFile)
-        return s.version
-      }
-      val name = s"dv-${UUID.randomUUID()}.parquet"
-      val staged = staging.toFile.listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      Files.move(staged.toPath, Paths.get(root, name),
-        StandardCopyOption.ATOMIC_MOVE)
-      org.apache.commons.io.FileUtils.deleteDirectory(staging.toFile)
-      if (commitAt(root, s.version + 1, Seq(addDvLine(
-        AddFile(name, st.getLong(0), st.getLong(1), st.getLong(2))))))
+      val dv = writeDv(root, dead).getOrElse(return s.version)
+      if (commitAt(root, s.version + 1, Seq(addDvLine(dv))))
         return s.version + 1
-      Files.deleteIfExists(Paths.get(root, name)) // stale dv; recompute
-      attempts += 1
+      Files.deleteIfExists(Paths.get(root, dv.path)) // stale dv; recompute
     }
-    throw new java.util.ConcurrentModificationException(
-      s"MOR delete at $root lost $MaxCowRetries commit races; giving up")
   }
 
   /** Row count at `version` from the manifest ALONE — no data file is
@@ -1566,24 +1568,15 @@ object TxTable {
       nFiles: Int = 8, carryOnUpdate: Set[String] = Set.empty,
       bySource: Option[MergeBySource] = None,
       txn: Option[(String, Long)] = None): Long = {
-    var attempts = 0
-    while (attempts < MaxCowRetries) {
+    retrying(root, "merge") {
       val s = snapshot(root)
       txn.foreach { case (app, b) => // replay (or twin-landed) batch
         if (s.txns.get(app).exists(_ >= b)) return s.version
       }
-      require(s.bucketBy.isEmpty,
-        s"$root is a BUCKETED table - copy-on-write rewrites would break " +
-          "bucket placement; index maintenance is append + MOR delete + " +
-          "per-bucket compaction (compactBuckets) + periodic rebuild")
-      val ranges = spark.createDataFrame(
-        s.files.map(f => (f.path, f.minK, f.maxK))).toDF("path", "mn", "mx")
+      requireRangeLayout(root, s)
       val hitPaths =
         if (bySource.isDefined) s.files.map(_.path).toSet
-        else changes.select(col("k").cast("long").as("k")).distinct()
-          .join(broadcast(ranges), col("k").between(col("mn"), col("mx")))
-          .select("path").distinct()
-          .collect().map(_.getString(0)).toSet // O(#files)
+        else filesHolding(spark, s, changes.select(col("k").cast("long").as("k")))
       val hit = s.files.filter(f => hitPaths(f.path))
       val target = readFiles(spark, root, s, hit)
       val nonKey = s.schema.fieldNames.filterNot(_ == s.key)
@@ -1617,7 +1610,7 @@ object TxTable {
                 when(bsHit, v).otherwise(base).as(c) })
               .getOrElse(base.as(c))
           }: _*)
-      val adds = writeDataFiles(spark, root, merged, s.key, nFiles,
+      val adds = writeDataFiles(root, merged, s.key, nFiles,
         s.statsCols, mapping = s.cols)
       val dvLines = dvRewriteActions(spark, root, s, hit)
       // STRICT commit + full recompute on a lost race: rebasing would
@@ -1628,10 +1621,8 @@ object TxTable {
           txn.map { case (a, b) => txnLine(a, b) }.toSeq ++
             hit.map(f => removeLine(f.path)) ++ adds.map(addLine) ++ dvLines))
         return s.version + 1
-      attempts += 1 // loop re-snapshots AND re-checks the txn watermark
+      // the next attempt re-snapshots AND re-checks the txn watermark
     }
-    throw new java.util.ConcurrentModificationException(
-      s"merge at $root lost $MaxCowRetries commit races; giving up")
   }
 
   /** Idempotent streaming UPSERT — the `foreachBatch` twin of
@@ -1692,15 +1683,11 @@ object TxTable {
     * stats still prune, just less tightly until the next OPTIMIZE. */
   def optimize(spark: SparkSession, root: String, zorderBy: Seq[String],
       nFiles: Int = 8, bitsPerCol: Int = 4): Long = {
-    var attempts = 0
-    while (attempts < MaxCowRetries) {
+    retrying(root, "optimize") {
       val s = snapshot(root)
-      require(s.bucketBy.isEmpty,
-        s"$root is a BUCKETED table - copy-on-write rewrites would break " +
-          "bucket placement; index maintenance is append + MOR delete + " +
-          "per-bucket compaction (compactBuckets) + periodic rebuild")
+      requireRangeLayout(root, s)
       val all = read(spark, root, Some(s.version))
-      val adds = writeDataFiles(spark, root, all, s.key, nFiles,
+      val adds = writeDataFiles(root, all, s.key, nFiles,
         statsCols0 = zorderBy,
         clusterBy = Some(zorderValue(all, zorderBy, bitsPerCol)),
         mapping = s.cols)
@@ -1712,25 +1699,18 @@ object TxTable {
         writeCheckpoint(root, s.version + 1)
         return s.version + 1
       }
-      attempts += 1 // a racing commit changed the live set: re-cluster it
     }
-    throw new java.util.ConcurrentModificationException(
-      s"optimize at $root lost $MaxCowRetries commit races; giving up")
   }
 
   /** Bin-pack the live files into ≤ `nFiles` range-clustered files
     * (content-identical rewrite) and drop a checkpoint at the new
     * version so future readers replay O(1) log files. */
   def compact(spark: SparkSession, root: String, nFiles: Int = 4): Long = {
-    var attempts = 0
-    while (attempts < MaxCowRetries) {
+    retrying(root, "compact") {
       val s = snapshot(root)
-      require(s.bucketBy.isEmpty,
-        s"$root is a BUCKETED table - copy-on-write rewrites would break " +
-          "bucket placement; index maintenance is append + MOR delete + " +
-          "per-bucket compaction (compactBuckets) + periodic rebuild")
+      requireRangeLayout(root, s)
       val all = read(spark, root, Some(s.version))
-      val adds = writeDataFiles(spark, root, all, s.key, nFiles,
+      val adds = writeDataFiles(root, all, s.key, nFiles,
         s.statsCols, mapping = s.cols)
       val gone = s.files.map(_.path) ++ s.dvs.map(_.path) // dvs are applied
       if (commitAt(root, s.version + 1,
@@ -1738,10 +1718,7 @@ object TxTable {
         writeCheckpoint(root, s.version + 1)
         return s.version + 1
       }
-      attempts += 1 // racing commit changed the live set: re-pack it
     }
-    throw new java.util.ConcurrentModificationException(
-      s"compact at $root lost $MaxCowRetries commit races; giving up")
   }
 
   /** Per-bucket OPTIMIZE for HASH-BUCKETED tables — the ONE sanctioned
@@ -1775,18 +1752,14 @@ object TxTable {
     * never dangle one. */
   def dropFilesAsOf(root: String, asOfV: Long): Long = {
     val consumed = snapshot(root, Some(asOfV)).files.map(_.path).toSet
-    var attempts = 0
-    while (attempts < MaxCowRetries) {
+    retrying(root, "dropFilesAsOf") {
       val s = snapshot(root)
       val gone = s.files.map(_.path).filter(consumed.contains)
       if (gone.isEmpty) return s.version
       if (commitAt(root, s.version + 1,
           infoLine("compact") +: gone.map(removeLine)))
         return s.version + 1
-      attempts += 1
     }
-    throw new java.util.ConcurrentModificationException(
-      s"dropFilesAsOf at $root lost $MaxCowRetries commit races")
   }
 
   /** Sentinel default for [[compactBuckets]]' prune: lets the writer
@@ -1800,8 +1773,7 @@ object TxTable {
   def compactBuckets(spark: SparkSession, root: String,
       prune: DataFrame => DataFrame = NoPrune): Long = {
     val opTag = if (prune eq NoPrune) "compact" else "compact_prune"
-    var attempts = 0
-    while (attempts < MaxCowRetries) {
+    retrying(root, "compactBuckets") {
       val s = snapshot(root)
       require(s.bucketBy.nonEmpty,
         s"$root is not a bucketed table - use compact/optimize (range tier)")
@@ -1810,7 +1782,7 @@ object TxTable {
         s"bucket-compaction prune must preserve the table schema, got " +
           s"[${live.schema.fieldNames.mkString(",")}] for " +
           s"[${s.schema.fieldNames.mkString(",")}]")
-      val adds = writeBucketedFiles(spark, root, live, s.key, s.bucketBy,
+      val adds = writeBucketedFiles(root, live, s.key, s.bucketBy,
         s.nBuckets, s.statsCols, s.cols)
       val gone = s.files.map(_.path) ++ s.dvs.map(_.path) // dvs absorbed
       if (commitAt(root, s.version + 1,
@@ -1818,10 +1790,7 @@ object TxTable {
         writeCheckpoint(root, s.version + 1)
         return s.version + 1
       }
-      attempts += 1 // racing commit changed the live set: re-pack it
     }
-    throw new java.util.ConcurrentModificationException(
-      s"compactBuckets at $root lost $MaxCowRetries commit races; giving up")
   }
 
   /** Materialize the live set at `v` as `_checkpoint.<v>.json`.
@@ -1829,11 +1798,9 @@ object TxTable {
     * put-if-absent) is the correct atomicity here. */
   def writeCheckpoint(root: String, v: Long): Unit = {
     val s = snapshot(root, Some(v), useCheckpoint = false)
-    val tmp = logDir(root).resolve(s"_tmp_${UUID.randomUUID()}.json")
-    Files.write(tmp, ((metaLineOf(s) +:
-      s.files.map(addLine)) ++ s.dvs.map(addDvLine) ++
+    val tmp = writeTmp(root, (metaLineOf(s) +: s.files.map(addLine)) ++
+      s.dvs.map(addDvLine) ++
       s.txns.toSeq.sortBy(_._1).map { case (a, b) => txnLine(a, b) })
-      .mkString("\n").getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, ckptFile(root, v), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }

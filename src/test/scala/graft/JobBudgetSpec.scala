@@ -3,23 +3,35 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
+import graft.io.TxTable
 import graft.ops.{GraphAnn, LlmOps}
 
-/** Spark jobs per step of the driver-sequenced LLM operators. At small
-  * scale each job costs a fixed driver round trip (task binary
-  * broadcast, scheduling, codegen) that dwarfs its compute, so the job
-  * count per step is pinned here. Jobs are attributed to SQL executions
-  * in start order; a job outside any execution (the final write of a
-  * [[graft.ops.Ckpt]]) belongs to the execution before it. */
+/** Spark jobs per step of the driver-sequenced LLM operators and per tx
+  * commit and read. At small scale each job costs a fixed driver round
+  * trip (task binary broadcast, scheduling, codegen) that dwarfs its
+  * compute, so the job count per step is pinned here. Jobs are
+  * attributed to SQL executions in start order; a job outside any
+  * execution (the final write of a [[graft.ops.Ckpt]]) belongs to the
+  * execution before it. */
 class JobBudgetSpec extends AnyFunSuite with Matchers {
   import TestSpark.{sf, spark}
 
   /** Jobs per SQL execution (in start order) that `body` ran. */
   private def jobsPerExecution[T](body: => T): (T, Seq[Int]) = {
+    val (out, per, _) = recordJobs(body)
+    (out, per)
+  }
+
+  /** `body`'s result, its jobs per SQL execution, and all the jobs it
+    * ran — also those before its first execution (a path listing or a
+    * schema inference while a DataFrame is being built). */
+  private def recordJobs[T](body: => T): (T, Seq[Int], Int) = {
     val group = s"job-budget-${System.nanoTime()}"
     val execOrder = mutable.ArrayBuffer[Long]()
     val jobs = mutable.ArrayBuffer[Option[Long]]() // exec id per job, in start order
@@ -63,7 +75,7 @@ class JobBudgetSpec extends AnyFunSuite with Matchers {
         j.flatMap(idx.get).foreach(cur = _)
         if (cur >= 0) per(cur) += 1
       }
-      (out, per.toSeq)
+      (out, per.toSeq, jobs.size)
     }
   }
 
@@ -100,5 +112,83 @@ class JobBudgetSpec extends AnyFunSuite with Matchers {
     per(1) should be <= 3
     per.drop(2).foreach(_ should be <= 6)
     graft.ops.Ckpt.releaseAll(spark)
+  }
+
+  // Tx commits and reads find their files through the manifest (no
+  // listing or schema-inference job), take file stats from the written
+  // footers (no stats job), and a one-file write needs no exchange. The
+  // table has more than 32 files, so a path-listed read would also run
+  // Spark's parallel listing job.
+  private lazy val txRoot: String = {
+    val r = s"/tmp/graft_jobspec_p${ProcessHandle.current.pid}/tx"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(r))
+    TxTable.create(spark, r, txRows(0, 4000), "k", nFiles = 40)
+    r
+  }
+
+  private def txRows(lo: Long, hi: Long) =
+    spark.range(lo, hi).select(col("id").as("k"),
+      (col("id") % 97).cast("double").as("v"))
+
+  /** All jobs `body` ran. */
+  private def txJobs[T](body: => T): (T, Int) = {
+    val (out, _, n) = recordJobs(body)
+    (out, n)
+  }
+
+  private def drainedRead(root: String) =
+    TxTable.read(spark, root).agg(count(lit(1)), sum(col("v"))).head
+
+  test("tx: a latest read drained by an aggregate runs <= 2 jobs") {
+    TxTable.snapshot(txRoot).files.size should be > 32
+    val (_, n) = txJobs(drainedRead(txRoot))
+    info(s"read jobs=$n")
+    n should be <= 2
+  }
+
+  test("tx: one-file append and delete are one job, upsertBatch <= 5, compact(4) <= 3") {
+    val (_, append) = txJobs(TxTable.append(spark, txRoot, txRows(5000, 5200), nFiles = 1))
+    val (_, delete) = txJobs(TxTable.delete(spark, txRoot, 100L, 140L, nFiles = 1))
+    val (_, upsert) = txJobs(TxTable.upsertBatch(spark, txRoot, "jobspec", 1L,
+      txRows(5100, 5300), nFiles = 1))
+    val (_, compact) = txJobs(TxTable.compact(spark, txRoot, nFiles = 4))
+    info(s"jobs: append=$append delete=$delete upsert=$upsert compact=$compact")
+    append should be <= 2
+    delete should be <= 2
+    upsert should be <= 5
+    compact should be <= 3
+    TxTable.read(spark, txRoot).count() shouldBe 4000L - 41L + 300L
+  }
+
+  // The tombstones are one manifest scan broadcast into an anti-join,
+  // and a broadcast materializes in a job of its own; a read with
+  // deletion vectors may run that one job more, but no listing or
+  // schema-inference job.
+  test("tx: a read with deletion vectors adds only the tombstone broadcast") {
+    val base = s"/tmp/graft_jobspec_p${ProcessHandle.current.pid}"
+    val (plain, dv) = (s"$base/plain", s"$base/dv")
+    Seq(plain, dv).foreach { r =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(r))
+      TxTable.create(spark, r, txRows(0, 400), "k", nFiles = 4)
+    }
+    TxTable.deleteMor(spark, dv, 10L, 19L)
+    TxTable.snapshot(dv).dvs should have size 1
+    val (p, nPlain) = txJobs(drainedRead(plain))
+    val (d, nDv) = txJobs(drainedRead(dv))
+    info(s"read jobs: plain=$nPlain with dvs=$nDv")
+    p.getLong(0) shouldBe 400L
+    d.getLong(0) shouldBe 390L
+    nDv should be <= nPlain + 1
+  }
+
+  test("tx: changes() over a pure append plans no join") {
+    val r = s"/tmp/graft_jobspec_p${ProcessHandle.current.pid}/feed"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(r))
+    TxTable.create(spark, r, txRows(0, 400), "k", nFiles = 4)
+    val v = TxTable.append(spark, r, txRows(400, 450), nFiles = 1)
+    val feed = TxTable.changes(spark, r, v - 1, v)
+    feed.queryExecution.optimizedPlan.collect { case j: Join => j } shouldBe empty
+    feed.groupBy("change_type").count().collect()
+      .map(x => x.getString(0) -> x.getLong(1)).toMap shouldBe Map("insert" -> 50L)
   }
 }
