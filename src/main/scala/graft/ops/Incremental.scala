@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.expressions.MinhashKernels
 import graft.io.{Tables, TxRelation, TxTable}
 
 /** Incremental-ingestion dedup (SURVEY §2 B23, the ingestion tier) —
@@ -33,41 +34,21 @@ import graft.io.{Tables, TxRelation, TxTable}
   */
 object Incremental {
 
-  private val MP = 2147483647L // 2^31 - 1, matches LlmOps.minhashAffine
-
-  /** q_minhash_lsh's 16-slot signature fold over a `shs` column (one
-    * aggregate over the shingle array; no explode, no shuffle). */
-  private def sigArr: Column = {
-    val baseHashes = transform(col("shs"),
-      x => LlmOps.md5Long(x).bitwiseAND(lit(0x7fffffffL)))
-    val affines: Column => Column = h =>
-      array(LlmOps.minhashAffine.map { case (a, b) =>
-        (lit(a) * h + lit(b)) % lit(MP)
-      }: _*)
-    aggregate(baseHashes,
-      array_repeat(lit(MP), 16),
-      (acc, h) => zip_with(acc, affines(h), (p, q) => least(p, q)))
-  }
+  private val MP = MinhashKernels.MersennePrime // 2^31 - 1
 
   /** (doc_id, n, shs, sig) for any (doc_id, text) frame. */
   private[graft] def signatures(d: DataFrame): DataFrame =
     LlmOps.docShinglesFrom(d)
-      .select(col("doc_id"), col("n"), col("shs"), sigArr.as("sig"))
+      .select(col("doc_id"), col("n"), col("shs"), LlmOps.minhashSig(col("shs")).as("sig"))
 
   /** [[signatures]] with the exact-layer md5 fingerprint carried in the
     * SAME stateless projection — the streaming core needs both without
     * re-reading (re-joining) the input stream. */
-  private def signaturesWithFp(d: DataFrame): DataFrame = {
-    val t = split(col("text"), " ")
-    val shs = array_distinct(
-      when(size(t) >= 5,
-        transform(sequence(lit(1), size(t) - 4),
-          i => concat_ws(" ", slice(t, i, lit(5)))))
-        .otherwise(array(concat_ws(" ", t))))
-    d.select(col("doc_id"), md5(col("text")).as("fp"), shs.as("shs"))
+  private def signaturesWithFp(d: DataFrame): DataFrame =
+    d.select(col("doc_id"), md5(col("text")).as("fp"),
+        MinhashKernels.docShingles(col("text")).as("shs"))
       .select(col("doc_id"), col("fp"), col("shs"),
-        size(col("shs")).as("n"), sigArr.as("sig"))
-  }
+        size(col("shs")).as("n"), LlmOps.minhashSig(col("shs")).as("sig"))
 
   /** (doc_id, band, bkey) LSH band rows from a signature frame. `bkey`
     * FOLDS THE BAND ORDINAL INTO THE HASH (prefix of the concat), so it

@@ -1,9 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructField, StructType}
 
+import graft.expressions.MinhashKernels
 import graft.io.{Tables, TxTable}
 
 /** LLM training-data pipeline operators (SURVEY §2 B22–B24): text
@@ -158,24 +160,18 @@ object LlmOps {
       .orderBy("keeper")
 
   /** Per-document distinct 5-gram shingle ARRAY — built entirely per-row
-    * (higher-order functions, zero shuffles): the basis for the Jaccard
-    * and MinHash paths. `n` (the set size every Jaccard denominator
-    * needs) rides along as a per-row `size` instead of a groupBy —
-    * removing a full-corpus shuffle from both near-dup queries. */
+    * (one native kernel, [[MinhashKernels.docShingles]]; zero shuffles):
+    * the basis for the Jaccard and MinHash paths. `n` (the set size every
+    * Jaccard denominator needs) rides along as a per-row `size` instead
+    * of a groupBy — removing a full-corpus shuffle from both near-dup
+    * queries. */
   private[ops] def docShingles(spark: SparkSession, sfDir: String): DataFrame =
     docShinglesFrom(docs(spark, sfDir))
 
   /** [[docShingles]] over any (doc_id, text) frame — the synthetic-corpus
     * entry point the skew/hot-band specs use. */
   private[graft] def docShinglesFrom(d: DataFrame): DataFrame =
-    d
-      .select(col("doc_id"), toks.as("t"))
-      .select(col("doc_id"),
-        array_distinct(
-          when(size(col("t")) >= 5,
-            transform(sequence(lit(1), size(col("t")) - 4),
-              i => concat_ws(" ", slice(col("t"), i, lit(5)))))
-            .otherwise(array(concat_ws(" ", col("t"))))).as("shs"))
+    d.select(col("doc_id"), MinhashKernels.docShingles(col("text")).as("shs"))
       .select(col("doc_id"), col("shs"), size(col("shs")).as("n"))
 
   /** Exploded (doc_id, shingle) rows — only for the equi-join paths.
@@ -310,11 +306,31 @@ object LlmOps {
     * one expensive hash instead of 16 per element, with seeded (aᵢ, bᵢ)
     * shared between the query and the generated oracle. All
     * intermediates < 2⁶² so both engines' BIGINT arithmetic is exact. */
-  private[ops] val minhashAffine: Seq[(Long, Long)] = {
+  private[graft] val minhashAffine: Seq[(Long, Long)] = {
     val rnd = new scala.util.Random(7)
     Seq.fill(16)((rnd.nextInt(2147483646).toLong + 1L, rnd.nextInt(2147483647).toLong))
   }
-  private val MersennePrime = 2147483647L // 2^31 - 1
+  private val MersennePrime = MinhashKernels.MersennePrime // 2^31 - 1
+
+  /** The 16-slot signature `array<bigint>` of a `shs` column, under
+    * [[minhashAffine]] ([[MinhashKernels.minhashSignature]]). */
+  private[graft] def minhashSig(shs: Column): Column =
+    MinhashKernels.minhashSignature(shs, minhashAffine)
+
+  /** (doc_id, band, bkey) rows: the 4 band keys of a (doc_id, sig) frame,
+    * each the [[md5Long]] of its 4 signature slots joined by commas. One
+    * pass emits all 4 per doc and explodes — NOT a 4-way union, which
+    * would recompute the signatures per band. */
+  private def bandRows(sig: DataFrame): DataFrame = {
+    val bandStructs = array((0 until 4).map { b =>
+      struct(lit(b).as("band"),
+        md5Long(concat_ws(",",
+          (4 * b until 4 * b + 4).map(j => element_at(col("sig"), j + 1)): _*))
+          .as("bkey"))
+    }: _*)
+    sig.select(col("doc_id"), explode(bandStructs).as("bb"))
+      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
+  }
 
   /** B23 MinHash+LSH banded near-dup — the 100 TB candidate-generation
     * path: 16 minhashes per doc → 4 bands of 4 → equi-join on band key →
@@ -327,39 +343,14 @@ object LlmOps {
   /** (doc_id, band, bkey) rows for the LSH band join — the shared front
     * half of [[minhashLshFrom]] and [[minhashBandOverCap]].
     *
-    * Signatures are computed PER ROW over the shingle array with ONE
-    * aggregate fold: the input transform materializes the base hashes
-    * once (one md5 per shingle), the fold keeps a 16-slot running-min
-    * vector via zip_with — zero shuffles AND no 16× hash duplication;
-    * at 100 TB the old formulation was an explode to |shingles| rows
-    * plus a wide shuffle back to one row per document. One pass over the
-    * signature then emits all 4 band keys per doc and explodes — NOT a
-    * 4-way union, which would recompute the whole shingle aggregation
-    * per band (4× the shuffles). */
-  private def minhashBands(d: DataFrame): DataFrame = {
-    val baseHashes = transform(col("shs"),
-      x => md5Long(x).bitwiseAND(lit(0x7fffffffL)))
-    val affines: Column => Column = h =>
-      array(minhashAffine.map { case (a, b) =>
-        (lit(a) * h + lit(b)) % lit(MersennePrime)
-      }: _*)
-    val sigArr = aggregate(baseHashes,
-      array_repeat(lit(MersennePrime), 16),
-      (acc, h) => zip_with(acc, affines(h), (p, q) => least(p, q)))
-    val minhashes: Seq[Column] =
-      (0 until 16).map(i => element_at(col("sig"), i + 1).as(s"m$i"))
-    val sig = docShinglesFrom(d)
-      .select(col("doc_id"), sigArr.as("sig"))
-      .select(col("doc_id") +: minhashes: _*)
-    val bandStructs = array((0 until 4).map { b =>
-      struct(lit(b).as("band"),
-        md5Long(concat_ws(",",
-          col(s"m${4 * b}"), col(s"m${4 * b + 1}"),
-          col(s"m${4 * b + 2}"), col(s"m${4 * b + 3}"))).as("bkey"))
-    }: _*)
-    sig.select(col("doc_id"), explode(bandStructs).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-  }
+    * Signatures are computed PER ROW by one native kernel over the
+    * shingle array ([[minhashSig]]): one md5 per shingle, a 16-slot
+    * running minimum, no per-shingle allocation — zero shuffles AND no
+    * 16× hash duplication; at 100 TB the old formulation was an explode
+    * to |shingles| rows plus a wide shuffle back to one row per
+    * document. */
+  private def minhashBands(d: DataFrame): DataFrame =
+    bandRows(docShinglesFrom(d).select(col("doc_id"), minhashSig(col("shs")).as("sig")))
 
   /** Observability twin of [[minhashLshFrom]]'s skew cap: the band
     * buckets whose membership EXCEEDS `cap` — exactly the buckets the
@@ -460,26 +451,9 @@ object LlmOps {
     * beyond the candidate join. MinhashEstSpec pins the theoretical
     * E[est16/16] = J unbiasedness within sampling error. */
   def qMinhashEst(spark: SparkSession, sfDir: String): DataFrame = {
-    val baseHashes = transform(col("shs"),
-      x => md5Long(x).bitwiseAND(lit(0x7fffffffL)))
-    val affines: Column => Column = h =>
-      array(minhashAffine.map { case (a, b) =>
-        (lit(a) * h + lit(b)) % lit(MersennePrime)
-      }: _*)
-    val sigArr = aggregate(baseHashes,
-      array_repeat(lit(MersennePrime), 16),
-      (acc, h) => zip_with(acc, affines(h), (p, q) => least(p, q)))
     val sig = docShingles(spark, sfDir)
-      .select(col("doc_id"), col("n"), col("shs"), sigArr.as("sig"))
-    val bandStructs = array((0 until 4).map { b =>
-      struct(lit(b).as("band"),
-        md5Long(concat_ws(",",
-          element_at(col("sig"), 4 * b + 1), element_at(col("sig"), 4 * b + 2),
-          element_at(col("sig"), 4 * b + 3), element_at(col("sig"), 4 * b + 4)))
-          .as("bkey"))
-    }: _*)
-    val bands = sig.select(col("doc_id"), explode(bandStructs).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
+      .select(col("doc_id"), col("n"), col("shs"), minhashSig(col("shs")).as("sig"))
+    val bands = bandRows(sig)
     val cand = bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -675,16 +649,79 @@ object LlmOps {
 
   /** (count, XOR of a per-edge hash) over an edge set — the round
     * fingerprint [[ccLargeSmallStar]] observes inside its checkpoint
-    * job. The XOR of distinct elements' hashes is order-free, so equal
-    * sets always have equal fingerprints. */
+    * job — plus the total row count. The XOR of distinct elements'
+    * hashes is order-free, so equal sets always have equal
+    * fingerprints. */
   private def observeFingerprint(df: DataFrame, name: String, u: Column,
       w: Column, keep: Column, hash: (Column, Column) => Column): DataFrame =
     df.observe(name, count(when(keep, lit(1))).as("n"),
-      coalesce(bit_xor(when(keep, hash(u, w))), lit(0L)).as("x"))
+      coalesce(bit_xor(when(keep, hash(u, w))), lit(0L)).as("x"),
+      count(lit(1)).as("rows"))
 
-  private def fingerprintOf(df: DataFrame, name: String): (Long, Long) = {
+  /** ((count, XOR) fingerprint, total rows) observed under `name`. */
+  private def fingerprintOf(df: DataFrame, name: String): ((Long, Long), Long) = {
     val r = df.queryExecution.observedMetrics(name)
-    (r.getLong(0), r.getLong(1))
+    ((r.getLong(0), r.getLong(1)), r.getLong(2))
+  }
+
+  private def isIntegral(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  /** The star-round fixpoint of a (u, w) edge set with integral ids,
+    * computed on the driver: the edges are collected by one job (each
+    * task packs its rows into one primitive array), the distinct
+    * vertices are sorted into an array that indexes them, and a
+    * union-find over an `int` parent array roots every component at
+    * its least index, i.e. its least id. The result is one (v, root)
+    * edge per non-root vertex — exactly the min-rooted stars the
+    * star rounds converge to — as a local relation typed like the wider
+    * of the two id columns. */
+  private def localStarEdges(edges: DataFrame): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val parts: Array[Array[Long]] = edges
+      .select(col("u").cast("long"), col("w").cast("long"))
+      .mapPartitions { rows =>
+        val b = Array.newBuilder[Long]
+        rows.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+        Iterator.single(b.result())
+      }.collect()
+    val ends = new Array[Long](parts.map(_.length).sum)
+    var off = 0
+    parts.foreach { p => System.arraycopy(p, 0, ends, off, p.length); off += p.length }
+    val vs = ends.clone()
+    java.util.Arrays.sort(vs)
+    var nv = 0
+    for (i <- vs.indices) if (i == 0 || vs(i) != vs(i - 1)) { vs(nv) = vs(i); nv += 1 }
+    val parent = Array.tabulate(nv)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    def idx(v: Long): Int = java.util.Arrays.binarySearch(vs, 0, nv, v)
+    var e = 0
+    while (e < ends.length) {
+      val (ra, rb) = (find(idx(ends(e))), find(idx(ends(e + 1))))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      e += 2
+    }
+    val t = Seq(edges.schema("u").dataType, edges.schema("w").dataType).maxBy(_.defaultSize)
+    val box: Long => Any = t match {
+      case ByteType => _.toByte
+      case ShortType => _.toShort
+      case IntegerType => _.toInt
+      case _ => identity
+    }
+    val star = new java.util.ArrayList[Row]()
+    for (i <- 0 until nv) {
+      val r = find(i)
+      if (r != i) star.add(Row(box(vs(i)), box(vs(r))))
+    }
+    spark.createDataFrame(star,
+      StructType(Seq(StructField("u", t), StructField("w", t))))
   }
 
   /** Connected components by ALTERNATING large-star/small-star rounds
@@ -695,11 +732,31 @@ object LlmOps {
     * instead of a neighbour×neighbour product. Fixpoint = the edge set
     * is a union of disjoint min-rooted stars; labels read off the star
     * edges. Deterministic: labels are component-min ids.
-    * Returns ((v, comp) labels, rounds).
+    * Returns ((v, comp) labels, star rounds run).
     *
     * Cost shape: ONE input checkpoint, then one checkpoint per round
     * (three shuffles: the large-star window, the small-star window and
-    * the distinct).
+    * the distinct) until the edge set is broadcast-sized, then ONE
+    * collect job. At small scale each job is a fixed driver round trip
+    * that dwarfs its compute, so the rounds stop as soon as the edge set
+    * fits in one JVM:
+    *  - at every round boundary (the input checkpoint is round 0) the
+    *    checkpoint job has already observed the row count. Once
+    *    count × row width (`schema.defaultSize`) ≤ `localFinishBytes`
+    *    (default: `spark.sql.autoBroadcastJoinThreshold`, the size at
+    *    which Spark ships a relation whole to every task; -1 keeps the
+    *    star rounds), the edge set is collected and finished on the
+    *    driver ([[localStarEdges]]). Round 0 counts every input row,
+    *    loops, NULLs and duplicates included, since the collect reads
+    *    the whole checkpoint. The check itself costs no job;
+    *  - the finish emits the star-round fixpoint itself, so the label
+    *    aggregate below runs over it unchanged: NULL, loop and duplicate
+    *    input rows keep their labels;
+    *  - only integral ids take it (the column type decides); other id
+    *    types run the rounds to the fixpoint;
+    *  - a dense component over the limit contracts in its first star
+    *    round to about one edge per vertex, and can finish from there.
+    * Specs pass `localFinishBytes = Some(-1)` to pin the star rounds.
     *
     * Convergence is decided inside each round's checkpoint job. The job
     * observes the fingerprint (edge count, XOR of `edgeHash(u, w)`) of
@@ -720,30 +777,39 @@ object LlmOps {
     * and never an early stop. `edgeHash` exists so a spec can force
     * collisions. */
   private[graft] def ccLargeSmallStar(pairs: DataFrame, maxRounds: Int = 64,
-      edgeHash: (Column, Column) => Column = xxhash64(_, _)): (DataFrame, Int) = {
+      edgeHash: (Column, Column) => Column = xxhash64(_, _),
+      localFinishBytes: Option[Long] = None): (DataFrame, Int) = {
     // materialize the INPUT once: the first round, its exact diff and
     // the final vertex set all read it — for the production callers
     // `pairs` is the whole MinHash-band + Jaccard-verify chain
     val base0 = observeFingerprint(pairs.select(col("da"), col("db")),
       "cc_in", col("da"), col("db"), col("da") =!= col("db"), edgeHash)
     val base = Ckpt(base0)
-    var fp = fingerprintOf(base0, "cc_in")
+    var (fp, inRows) = fingerprintOf(base0, "cc_in")
+    val limit = localFinishBytes.getOrElse(
+      pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold)
+    val localOk = limit >= 0 &&
+      isIntegral(base.df.schema("da").dataType) && isIntegral(base.df.schema("db").dataType)
+    def fitsLocally(rows: Long, df: DataFrame): Boolean =
+      localOk && rows * df.schema.defaultSize <= limit
     var prev: DataFrame = base.df
       .select(col("da").as("u"), col("db").as("w"))
       .filter(col("u") =!= col("w"))
     var held = List.empty[Ckpt] // star-round checkpoints still resident
     var rounds = 0
+    var local = fitsLocally(inRows, base.df)
     var converged = false
     // every checkpoint this call made is released on a failure (a
-    // cancelled round, a diff that throws, the round cap)
+    // cancelled round or collect, a diff that throws, the round cap)
     try {
-      while (!converged && rounds < maxRounds) {
+      while (!converged && !local && rounds < maxRounds) {
         val step = observeFingerprint(smallStar(largeStar(prev)).distinct(),
           "cc_round", col("u"), col("w"), lit(true), edgeHash)
         val next = Ckpt(step)
         held = next :: held
-        val nextFp = fingerprintOf(step, "cc_round")
-        converged = nextFp == fp &&
+        val (nextFp, _) = fingerprintOf(step, "cc_round")
+        local = fitsLocally(nextFp._1, next.df)
+        converged = !local && nextFp == fp &&
           next.df.join(prev, Seq("u", "w"), "left_anti").isEmpty
         // the superseded round's blocks have no remaining consumer (the
         // diff above was the last) — release, keeping O(1) resident
@@ -753,7 +819,12 @@ object LlmOps {
         fp = nextFp
         rounds += 1
       }
-      if (!converged)
+      if (local) {
+        prev = localStarEdges(prev)
+        // the local stars replace the last round's edge set
+        held.foreach(_.release())
+        held = Nil
+      } else if (!converged)
         throw new IllegalStateException(
           s"ccLargeSmallStar: star rounds did not reach a fixpoint in " +
             s"$maxRounds rounds — raise maxRounds")

@@ -20,25 +20,13 @@ import graft.ops.LlmOps
 @org.scalatest.tags.Slow // slow tier: GRAFT_TEST_TIER=slow|all (SURVEY §7)
 class CcAdversarialSoakSpec extends AnyFunSuite with Matchers {
   import TestSpark.spark
+  import CcTruth.unionFind
 
-  /** Exact driver-side truth: path-compressed union-find labeling each
-    * vertex with its component MINIMUM (the engine's contract). */
-  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(x: Long): Long = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    edges.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
-    parent.keys.map(v => v -> find(v)).toMap
-  }
+  /** Pins the star rounds: both graphs fit under the local-finish limit. */
+  private val StarsOnly = Some(-1L)
 
-  test("giant slab + skewed hub converge in O(log n) star rounds, labels exact, keep = one per component") {
-    import spark.implicits._
-    // the adversary, all three shapes at once:
+  /** The adversary, all three shapes at once (23,001 vertices). */
+  private lazy val soakGraph: Seq[(Long, Long)] = {
     //  - SLAB: 3000-vertex window graph (i — i+1..i+4): one dense
     //    component of diameter ~750 — propagation would need ~750
     //    full-edge-shuffle rounds; chained near-dup text produces
@@ -53,11 +41,16 @@ class CcAdversarialSoakSpec extends AnyFunSuite with Matchers {
     val rnd = new scala.util.Random(0xC0FFEE)
     val bridges = Seq.fill(32)((rnd.nextInt(3000).toLong,
       100000L + 1 + rnd.nextInt(20000).toLong))
-    val pairsList = slab ++ hub ++ bridges
+    slab ++ hub ++ bridges
+  }
+
+  test("giant slab + skewed hub converge in O(log n) star rounds, labels exact, keep = one per component") {
+    import spark.implicits._
+    val pairsList = soakGraph
     val pairs = pairsList.toDF("da", "db")
 
     val t0 = System.nanoTime()
-    val (comp, rounds) = LlmOps.ccLargeSmallStar(pairs)
+    val (comp, rounds) = LlmOps.ccLargeSmallStar(pairs, localFinishBytes = StarsOnly)
     val labels = comp.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val wall = (System.nanoTime() - t0) / 1e9
     info(f"[cc-soak] wall=$wall%.1f s rounds=$rounds edges=${pairsList.size} verts=${labels.size}")
@@ -85,10 +78,21 @@ class CcAdversarialSoakSpec extends AnyFunSuite with Matchers {
       val b = 200000L + 3 * t
       Seq((b, b + 1), (b + 1, b + 2), (b, b + 2))
     }
-    val (comp, rounds) = LlmOps.ccLargeSmallStar(tris.toDF("da", "db"))
+    val (comp, rounds) = LlmOps.ccLargeSmallStar(tris.toDF("da", "db"), localFinishBytes = StarsOnly)
     rounds should be <= 6
     val labels = comp.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     labels shouldBe unionFind(tris)
     labels.count { case (v, c) => v == c } shouldBe 5000
+  }
+
+  test("the soak graph finishes locally with the star rounds' labels") {
+    import spark.implicits._
+    val pairsList = soakGraph
+    val t0 = System.nanoTime()
+    val (comp, rounds) = LlmOps.ccLargeSmallStar(pairsList.toDF("da", "db"))
+    val labels = comp.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    info(f"[cc-soak local] wall=${(System.nanoTime() - t0) / 1e9}%.1f s rounds=$rounds")
+    rounds shouldBe 0
+    labels shouldBe unionFind(pairsList)
   }
 }

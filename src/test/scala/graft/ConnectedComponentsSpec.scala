@@ -18,6 +18,10 @@ class ConnectedComponentsSpec extends AnyFunSuite with Matchers {
   private def labels(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
+  /** Pins the star rounds: every input here is far under the local-finish
+    * limit, which would otherwise replace the rounds under test. */
+  private val StarsOnly = Some(-1L)
+
   test("stars == propagation on a chained-duplicate path graph, in far fewer rounds") {
     import spark.implicits._
     // path 0-1-2-...-47: diameter 47 — propagation's worst case (labels
@@ -25,7 +29,7 @@ class ConnectedComponentsSpec extends AnyFunSuite with Matchers {
     // documents produce
     val pairs = (0L until 47L).map(i => (i, i + 1)).toDF("da", "db")
     val (prop, propRounds) = LlmOps.ccPropagation(pairs, maxRounds = 128)
-    val (stars, starRounds) = LlmOps.ccLargeSmallStar(pairs)
+    val (stars, starRounds) = LlmOps.ccLargeSmallStar(pairs, localFinishBytes = StarsOnly)
     labels(stars) shouldBe labels(prop)
     labels(stars).values.toSet shouldBe Set(0L)
     propRounds should be >= 24
@@ -95,6 +99,44 @@ class ConnectedComponentsSpec extends AnyFunSuite with Matchers {
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "cancel the first star-round checkpoint")
     val ex =
+      try intercept[Exception](LlmOps.ccLargeSmallStar(pairs, localFinishBytes = StarsOnly))
+      finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString(" ") should include("cancel")
+    sc.getPersistentRDDs shouldBe empty
+  }
+
+  test("ccLargeSmallStar leaks no checkpoint when the local-finish collect fails") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import org.apache.spark.sql.functions.col
+    // 500k edges of 16 bytes are 8 MB, under the default 10 MB limit, so
+    // the second execution is the local finish's collect of the input
+    // checkpoint. The listener cancels its job; the call must fail with
+    // the cancellation and leave no persisted RDD behind.
+    val group = "cc-local-leak-spec"
+    val execs = scala.collection.mutable.ArrayBuffer[Long]()
+    val sc = spark.sparkContext
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => execs.synchronized(execs += s.executionId)
+        case _ =>
+      }
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val p = js.properties
+        val exec = if (p == null) null else p.getProperty("spark.sql.execution.id")
+        if (exec != null && p.getProperty("spark.jobGroup.id") == group)
+          execs.synchronized {
+            if (execs.size >= 2 && execs(1) == exec.toLong) sc.cancelJob(js.jobId)
+          }
+      }
+    }
+    val pairs = spark.range(500000).select((col("id") % 400000).as("da"),
+      ((col("id") + 1) % 400000).as("db"))
+    graft.ops.Ckpt.releaseAll(spark)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "cancel the local-finish collect")
+    val ex =
       try intercept[Exception](LlmOps.ccLargeSmallStar(pairs))
       finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
     Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
@@ -112,9 +154,9 @@ class ConnectedComponentsSpec extends AnyFunSuite with Matchers {
     // Stopping on the fingerprint alone would return E1's labels (3 → 1);
     // the exact diff must reject both collisions and run to E2 = E3.
     val pairs = Seq((0L, 1L), (1L, 2L), (2L, 3L)).toDF("da", "db")
-    val (hashed, hashedRounds) = LlmOps.ccLargeSmallStar(pairs)
-    val (collided, collidedRounds) =
-      LlmOps.ccLargeSmallStar(pairs, edgeHash = (_, _) => lit(0L))
+    val (hashed, hashedRounds) = LlmOps.ccLargeSmallStar(pairs, localFinishBytes = StarsOnly)
+    val (collided, collidedRounds) = LlmOps.ccLargeSmallStar(pairs,
+      edgeHash = (_, _) => lit(0L), localFinishBytes = StarsOnly)
     labels(collided) shouldBe Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L)
     labels(collided) shouldBe labels(hashed)
     collidedRounds shouldBe hashedRounds

@@ -90,7 +90,8 @@ class JobBudgetSpec extends AnyFunSuite with Matchers {
     // a path takes several rounds; a local input needs no shuffle, so its
     // checkpoint is the one materialization job
     val pairs = (0L until 24L).map(i => (i, i + 1)).toDF("da", "db")
-    val ((_, rounds), per) = jobsPerExecution(LlmOps.ccLargeSmallStar(pairs))
+    val ((_, rounds), per) =
+      jobsPerExecution(LlmOps.ccLargeSmallStar(pairs, localFinishBytes = Some(-1L)))
     info(s"rounds=$rounds jobs per execution=${per.mkString(",")}")
     rounds should be >= 3
     // input checkpoint, one checkpoint per round, then ONE exact diff:
@@ -99,6 +100,40 @@ class JobBudgetSpec extends AnyFunSuite with Matchers {
     per.head should be <= 1
     per.slice(1, rounds + 1).foreach(_ should be <= 5)
     per.last should be <= 5
+    graft.ops.Ckpt.releaseAll(spark)
+  }
+
+  // The local finish replaces the rounds once the edge set is
+  // broadcast-sized: one collect job, and no convergence diff.
+  test("ccLargeSmallStar local finish: a broadcast-sized input runs its checkpoint and one collect") {
+    import spark.implicits._
+    graft.ops.Ckpt.releaseAll(spark)
+    val pairs = (0L until 24L).map(i => (i, i + 1)).toDF("da", "db")
+    val ((comp, rounds), per) = jobsPerExecution(LlmOps.ccLargeSmallStar(pairs))
+    info(s"rounds=$rounds jobs per execution=${per.mkString(",")}")
+    rounds shouldBe 0
+    per.size shouldBe 2
+    per.head should be <= 1
+    per(1) should be <= 2
+    comp.collect().map(_.getLong(1)).toSet shouldBe Set(0L)
+    graft.ops.Ckpt.releaseAll(spark)
+  }
+
+  test("ccLargeSmallStar local finish: a clique over the limit runs one star round, then collects") {
+    import spark.implicits._
+    graft.ops.Ckpt.releaseAll(spark)
+    // 190 edges of 16 bytes exceed 1000; one round contracts the clique
+    // to its 19-edge star, which fits
+    val pairs = (for (a <- 0L until 20L; b <- a + 1 until 20L) yield (a, b)).toDF("da", "db")
+    val ((comp, rounds), per) =
+      jobsPerExecution(LlmOps.ccLargeSmallStar(pairs, localFinishBytes = Some(1000L)))
+    info(s"rounds=$rounds jobs per execution=${per.mkString(",")}")
+    rounds shouldBe 1
+    per.size shouldBe 3
+    per.head should be <= 1
+    per(1) should be <= 5
+    per(2) should be <= 2
+    comp.collect().map(_.getLong(1)).toSet shouldBe Set(0L)
     graft.ops.Ckpt.releaseAll(spark)
   }
 
